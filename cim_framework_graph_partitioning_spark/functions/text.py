@@ -19,23 +19,35 @@ from pyspark.sql import types as T
 
 # --- symbol extraction -------------------------------------------------
 
+# The spec is the DuckDB corpus_edges oracle's RE2 (queries.py
+# _SQL_CORPUS_EDGES): ``\s`` is ASCII [\t\n\f\r ] and multiline ``^``
+# matches only after ``\n``. Python's ``\s`` is Unicode-wide (U+00A0,
+# \x0B) and Java's ASCII ``\s`` still has \x0B, so whitespace is spelled
+# out as _WS; Java's ``^`` also matches after \r and U+2028, which the
+# JVM pattern turns off with UNIX_LINES (``(?d)``, see extract_refs).
+_WS = r"[\t\n\f\r ]"
+
 _IMPORT_RE = {
     # One compiled regex per supported language, single capture group =
-    # the referenced symbol. Kept RE2-compatible on purpose: the DuckDB
-    # corpus_edges oracle replays these same patterns character for
-    # character (queries.py _SQL_CORPUS_EDGES), so stick to (?m), (?:),
-    # \b, explicit char classes — no lookbehind/backrefs.
-    "python": re.compile(r"^\s*(?:import|from)\s+([A-Za-z_][A-Za-z0-9_.]*)", re.M),
-    "c": re.compile(r'^\s*#\s*include\s*[<"]([^>"]+)[>"]', re.M),
-    "go": re.compile(r'^\s*import\s+"([^"]+)"', re.M),
+    # the referenced symbol. Kept RE2-compatible on purpose: stick to
+    # (?m), (?:), \b, explicit char classes — no lookbehind/backrefs.
+    "python": re.compile(
+        rf"^{_WS}*(?:import|from){_WS}+([A-Za-z_][A-Za-z0-9_.]*)", re.M
+    ),
+    "c": re.compile(rf'^{_WS}*#{_WS}*include{_WS}*[<"]([^>"]+)[>"]', re.M),
+    "go": re.compile(rf'^{_WS}*import{_WS}+"([^"]+)"', re.M),
     # `import x from 'm'` / side-effect `import 'm'` / `require('m')`
     "javascript": re.compile(
-        r"(?:\bfrom\s+|\brequire\(\s*|^\s*import\s+)['\"]([^'\"]+)['\"]", re.M
+        rf"(?:\bfrom{_WS}+|\brequire\({_WS}*|^{_WS}*import{_WS}+)['\"]([^'\"]+)['\"]",
+        re.M,
     ),
     "java": re.compile(
-        r"^\s*import\s+(?:static\s+)?([A-Za-z_][A-Za-z0-9_.]*)\s*;", re.M
+        rf"^{_WS}*import{_WS}+(?:static{_WS}+)?([A-Za-z_][A-Za-z0-9_.]*){_WS}*;",
+        re.M,
     ),
-    "rust": re.compile(r"^\s*(?:pub\s+)?use\s+([A-Za-z_][A-Za-z0-9_:]*)", re.M),
+    "rust": re.compile(
+        rf"^{_WS}*(?:pub{_WS}+)?use{_WS}+([A-Za-z_][A-Za-z0-9_:]*)", re.M
+    ),
 }
 # TypeScript import syntax is JavaScript's.
 _IMPORT_RE["typescript"] = _IMPORT_RE["javascript"]
@@ -45,12 +57,14 @@ def extract_refs(content: F.Column, lang: F.Column) -> F.Column:
     """Per-file list of referenced symbols (imports/includes), by lang.
 
     Pure JVM expression: a CASE over ``regexp_extract_all`` with the
-    per-language pattern (the ``(?m)`` flag inlined). This removes the
+    per-language pattern (the ``(?m)`` flag inlined, plus ``(?d)`` so
+    ``^`` follows only ``\n``). This removes the
     former ArrowEvalPython node — and with it the JVM→Python→JVM Arrow
     round-trip of every file body — from the edge-derivation scan stage
     (guide §4.1: built-ins over UDFs). The patterns are deliberately
-    RE2-compatible (no lookbehind/backrefs), so Java, Python and the
-    DuckDB oracle's RE2 all match them identically; findall with one
+    RE2-compatible (no lookbehind/backrefs, explicit whitespace), so
+    Java, Python and the DuckDB oracle's RE2 all match them
+    identically; findall with one
     capture group ≡ regexp_extract_all(..., 1), both non-overlapping
     left-to-right scans.
     """
@@ -58,7 +72,7 @@ def extract_refs(content: F.Column, lang: F.Column) -> F.Column:
     for lg, rx in _IMPORT_RE.items():
         if lg == "typescript":
             continue  # same compiled pattern object as javascript
-        pat = "(?m)" + rx.pattern
+        pat = "(?dm)" + rx.pattern
         matched = F.regexp_extract_all(content, F.lit(pat), 1)
         cond = (
             lang.isin(lg, "typescript") if lg == "javascript" else lang == lg

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import release_checkpoint
 from ..plans.scale import auto_blocks
+from ..plans.scope import LoopScope, loop_scope
 
 
 def harmonic_centrality_sampled(
@@ -57,10 +58,9 @@ def harmonic_centrality_sampled(
         .persist()
     )
     e.count()
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with loop_scope(spark, p, keep_aqe=True) as scope:
+        scope.cache(e)
+        levels = _bfs_levels(spark, scope, e, sources, max_depth)
         if not levels:
             return spark.createDataFrame([], "id long, harmonic double")
         parts = [levels[0].select("v", F.lit(0.0).alias("h"))]
@@ -74,24 +74,21 @@ def harmonic_centrality_sampled(
             .agg(F.sum("h").alias("harmonic"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for lv in levels:
-        release_checkpoint(lv)
     return result
 
 
 def _bfs_levels(
     spark: SparkSession,
+    scope: LoopScope,
     e: DataFrame,
     sources: DataFrame,
     max_depth: int,
 ) -> list[DataFrame]:
     """Batched multi-source level-synchronous BFS over a cached,
     src-partitioned edge table. Returns one (s, v, sigma) frame per
-    level (each localCheckpointed — caller releases); empty list if
-    there are no sources. sigma = number of shortest s→v paths."""
+    level (each localCheckpointed and released when ``scope`` exits);
+    empty list if there are no sources. sigma = number of shortest
+    s→v paths."""
     levels: list[DataFrame] = []
     frontier = (
         sources.select(
@@ -105,7 +102,7 @@ def _bfs_levels(
     if frontier.isEmpty():
         release_checkpoint(frontier)
         return []
-    levels.append(frontier)
+    levels.append(scope.release(frontier))
     reached = frontier.select("s", "v")
     for _d in range(max_depth):
         # new-frontier size rides the level checkpoint as an observed
@@ -126,7 +123,7 @@ def _bfs_levels(
         if (obs.get["n"] or 0) == 0:
             release_checkpoint(nxt)
             break
-        levels.append(nxt)
+        levels.append(scope.release(nxt))
         reached = reached.unionByName(nxt.select("s", "v"))
         frontier = nxt
     else:
@@ -156,11 +153,9 @@ def betweenness_sampled(
     )
     e.count()
 
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    scratch: list[DataFrame] = []  # checkpoints to release at the end
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with loop_scope(spark, p, keep_aqe=True) as scope:
+        scope.cache(e)
+        levels = _bfs_levels(spark, scope, e, sources, max_depth)
         if not levels:
             return spark.createDataFrame([], "id long, bc double")
 
@@ -194,7 +189,7 @@ def betweenness_sampled(
                 )
                 .localCheckpoint(eager=True)
             )
-            scratch.append(delta)
+            scope.release(delta)
         # the level-0 sweep output is the sources' own dependency —
         # Brandes excludes s from its own accumulation: drop s == v
         bc_parts.append(
@@ -209,11 +204,6 @@ def betweenness_sampled(
             .agg(F.sum("delta").alias("bc"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for fr in levels + scratch:
-        release_checkpoint(fr)
     return result
 
 
@@ -239,10 +229,9 @@ def closeness_centrality_sampled(
         .persist()
     )
     e.count()
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with loop_scope(spark, p, keep_aqe=True) as scope:
+        scope.cache(e)
+        levels = _bfs_levels(spark, scope, e, sources, max_depth)
         if not levels:
             return spark.createDataFrame([], "id long, closeness double")
         parts = [
@@ -269,11 +258,6 @@ def closeness_centrality_sampled(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for lv in levels:
-        release_checkpoint(lv)
     return result
 
 
@@ -298,10 +282,9 @@ def eccentricity_sampled(
         .persist()
     )
     e.count()
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with loop_scope(spark, p, keep_aqe=True) as scope:
+        scope.cache(e)
+        levels = _bfs_levels(spark, scope, e, sources, max_depth)
         if not levels:
             return spark.createDataFrame([], "id long, eccentricity long")
         parts = [
@@ -318,9 +301,4 @@ def eccentricity_sampled(
             .agg(F.max("d").cast("long").alias("eccentricity"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for lv in levels:
-        release_checkpoint(lv)
     return result

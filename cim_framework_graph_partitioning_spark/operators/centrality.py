@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 
@@ -71,27 +72,19 @@ def katz_centrality(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup; caches released in the finally
-    # (they used to leak on a runner exception — ADVICE r5)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    verts = e_by_src = None
-    try:
-        verts = (
+    # loop-scoped conf BEFORE setup, so the cached static tables land on
+    # hash(key, p) partitioning directly
+    with loop_scope(spark, p) as scope:
+        verts = scope.cache(
             edges.select(F.col("src_id").alias("id"))
             .unionByName(edges.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         n = verts.count()
         if n == 0:
             return spark.createDataFrame([], "id long, katz double"), 0
-        e_by_src = (
-            edges.select("src_id", "dst_id", "weight")
-            .repartition(p, "src_id")
-            .persist()
+        e_by_src = scope.cache(
+            edges.select("src_id", "dst_id", "weight").repartition(p, "src_id")
         )
         e_by_src.count()
 
@@ -139,12 +132,6 @@ def katz_centrality(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        for c in (verts, e_by_src):
-            if c is not None:
-                c.unpersist()
     if metrics_sink is not None:
         metrics_sink.extend(runner.history)
     return scores.select("id", "katz"), steps
@@ -173,20 +160,15 @@ def salsa(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup; caches released in the finally
-    # (they used to leak on a runner exception — ADVICE r5)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    e_fwd = e_bwd = None
-    try:
+    # loop-scoped conf BEFORE setup, so the cached static tables land on
+    # hash(key, p) partitioning directly
+    with loop_scope(spark, p) as scope:
         e = edges.select("src_id", "dst_id", "weight")
         # static normalized transition fractions via a window over the
         # exchange each cache needs anyway (one exchange per side; the
         # former groupBy+join+repartition chains paid two more each) —
         # cached partitioned by the join key of their half-step
-        e_fwd = (
+        e_fwd = scope.cache(
             e.repartition(p, "src_id")
             .select(
                 "src_id", "dst_id",
@@ -194,9 +176,8 @@ def salsa(
                     Window.partitionBy("src_id")
                 )).alias("fo"),
             )
-            .persist()
         )
-        e_bwd = (
+        e_bwd = scope.cache(
             e.repartition(p, "dst_id")
             .select(
                 "src_id", "dst_id",
@@ -204,7 +185,6 @@ def salsa(
                     Window.partitionBy("dst_id")
                 )).alias("fi"),
             )
-            .persist()
         )
         e_fwd.count()
         e_bwd.count()
@@ -291,12 +271,6 @@ def salsa(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        for c in (e_fwd, e_bwd):
-            if c is not None:
-                c.unpersist()
     if metrics_sink is not None:
         metrics_sink.extend(runner.history)
     return out, steps

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 from ..plans.scale import auto_blocks
 from .edges import symmetrize
@@ -50,20 +51,14 @@ def connected_components(
             resume=resume, run_id=run_id,
         )
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        und = (
-            symmetrize(edges).select("src_id", "dst_id")
-            .repartition(p, "src_id").persist()
+    with loop_scope(spark, p) as scope:
+        und = scope.cache(
+            symmetrize(edges).select("src_id", "dst_id").repartition(p, "src_id")
         )
-        verts = (
+        verts = scope.cache(
             und.select(F.col("src_id").alias("id"))
             .unionByName(und.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         init = verts.select("id", F.col("id").alias("component"))
 
@@ -103,11 +98,6 @@ def connected_components(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
-    verts.unpersist()
     return labels, steps
 
 
@@ -136,16 +126,11 @@ def _cc_two_phase(
     per superstep, the driver never holds edges.
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        verts = (
+    with loop_scope(spark, p) as scope:
+        verts = scope.cache(
             edges.select(F.col("src_id").alias("id"))
             .unionByName(edges.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         init = (
             edges.filter(F.col("src_id") != F.col("dst_id"))
@@ -165,11 +150,13 @@ def _cc_two_phase(
             # compute each once instead of twice (no extra jobs — the
             # cache fills mid-job at the stage boundary) and are released
             # right after the materialization.
-            sym = E.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-                E.select(F.col("b").alias("u"), F.col("a").alias("v"))
-            ).persist()
+            sym = scope.cache(
+                E.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
+                    E.select(F.col("b").alias("u"), F.col("a").alias("v"))
+                )
+            )
             mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-            ls = (
+            ls = scope.cache(
                 sym.join(mins.hint("shuffle_hash"), "u")
                 .filter(F.col("v") > F.col("u"))
                 .select(
@@ -177,7 +164,6 @@ def _cc_two_phase(
                     F.least(F.col("u"), F.col("mn")).alias("b"),
                 )
                 .distinct()
-                .persist()
             )
             # small-star: per node a, connect a and all smaller neighbors
             # to the min smaller neighbor.
@@ -217,29 +203,28 @@ def _cc_two_phase(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    if steps >= max_iter and runner.history and runner.history[-1]["changed"] != 0:
-        # max_iter exhausted before the star fixpoint: a satellite may
-        # still hold >1 center, and the left join below would then emit
-        # DUPLICATE (id, component) rows — a silently malformed labels
-        # table. Collapse to one center per satellite (min preserves the
-        # partial-contraction invariant: component ids only decrease)
-        # and surface the truncation instead of hiding it.
-        import warnings
+        # the post-loop label join is a one-shot plan: it runs under the
+        # caller's conf (AQE coalescing, plans/scale.py) while verts
+        # stays cached until it is done
+        scope.restore_conf()
+        if steps >= max_iter and runner.history and runner.history[-1]["changed"] != 0:
+            # max_iter exhausted before the star fixpoint: a satellite may
+            # still hold >1 center, and the left join below would then emit
+            # DUPLICATE (id, component) rows — a silently malformed labels
+            # table. Collapse to one center per satellite (min preserves the
+            # partial-contraction invariant: component ids only decrease)
+            # and surface the truncation instead of hiding it.
+            import warnings
 
-        warnings.warn(
-            f"connected_components: star fixpoint not reached in "
-            f"{max_iter} supersteps; emitting one min-center per vertex "
-            f"(labels may be under-merged)",
-            stacklevel=2,
+            warnings.warn(
+                f"connected_components: star fixpoint not reached in "
+                f"{max_iter} supersteps; emitting one min-center per vertex "
+                f"(labels may be under-merged)",
+                stacklevel=2,
+            )
+            stars = stars.groupBy("a").agg(F.min("b").alias("b"))
+        labels = (
+            verts.join(stars.hint("shuffle_hash"), verts.id == stars.a, "left")
+            .select("id", F.coalesce(F.col("b"), F.col("id")).alias("component"))
         )
-        stars = stars.groupBy("a").agg(F.min("b").alias("b"))
-    labels = (
-        verts.join(stars.hint("shuffle_hash"), verts.id == stars.a, "left")
-        .select("id", F.coalesce(F.col("b"), F.col("id")).alias("component"))
-    )
-    out = labels.localCheckpoint(eager=True)
-    verts.unpersist()
-    return out, steps
+        return labels.localCheckpoint(eager=True), steps

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 
 
 def topological_levels(
@@ -54,10 +55,9 @@ def topological_levels(
     b_verts = PlanBarrier(spark, tag="topo_verts")
     b_edges = PlanBarrier(spark, tag="topo_edges")
     b_result = PlanBarrier(spark, tag="topo_result")
-    # loop-scoped shuffle pin, restored on exit
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop-scoped shuffle pin, restored on exit (AQE stays on: see
+    # longest_path_lengths)
+    with loop_scope(spark, p, keep_aqe=True):
         while n_left > 0 and level < max_iter:
             has_in = remaining_edges.select(F.col("dst_id").alias("id")).distinct()
             # frontier is CHECKPOINTED (lineage cut), not merely cached:
@@ -92,8 +92,6 @@ def topological_levels(
             remaining, remaining_edges = new_remaining, new_edges
             n_left -= n_front
             level += 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
     if result is None:  # empty edge table → no vertices, no levels
         return spark.createDataFrame([], "id long, level int")
     return result.repartition(p, "id")
@@ -127,14 +125,7 @@ def longest_path_lengths(
         .localCheckpoint(eager=True)
     )
     e = edges.select("src_id", "dst_id").distinct().repartition(p, "src_id").persist()
-    # loop-scoped shuffle pin, restored on exit. AQE is deliberately
-    # LEFT ALONE here: with adaptive execution disabled, this loop's
-    # accumulate-union-of-checkpoints pattern trips a reproducible
-    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in PlanBarrier's release path
-    # (test_topological_levels fails deterministically); the peel runs
-    # one round per DAG level, so per-round replanning is cheap anyway.
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
+
     def relax(d: DataFrame) -> DataFrame:
         cand = (
             d.join(e, d.id == e.src_id)
@@ -148,7 +139,14 @@ def longest_path_lengths(
             ).alias("dist"),
         )
 
-    try:
+    # loop-scoped shuffle pin, restored on exit. AQE is deliberately
+    # LEFT ALONE here: with adaptive execution disabled, this loop's
+    # accumulate-union-of-checkpoints pattern trips a reproducible
+    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in PlanBarrier's release path
+    # (test_topological_levels fails deterministically); the peel runs
+    # one round per DAG level, so per-round replanning is cheap anyway.
+    with loop_scope(spark, p, keep_aqe=True) as scope:
+        scope.cache(e)
         for _ in range(max_iter):
             seg = dist
             for _b in range(fuse_steps):
@@ -172,9 +170,6 @@ def longest_path_lengths(
             dist = barrier.cut(merged)
             if (obs.get["n"] or 0) == 0:
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    e.unpersist()
     return dist
 
 

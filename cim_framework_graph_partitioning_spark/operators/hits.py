@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 
@@ -74,168 +75,139 @@ def hits(
 
     # loop-scoped conf BEFORE setup (same discipline as pagerank): the
     # cached static tables and the init land on hash(key, p) directly
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        return _hits_inner(
-            spark, edges, tol, max_iter, p, checkpoint_dir, checkpoint_every,
-            resume, run_id, metrics_sink,
+    with loop_scope(spark, p) as scope:
+        verts = scope.cache(
+            edges.select(F.col("src_id").alias("id"))
+            .unionByName(edges.select(F.col("dst_id").alias("id")))
+            .distinct()
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
+        n = verts.count()
+        if n == 0:
+            return spark.createDataFrame([], "id long, hub double, auth double"), 0
 
+        e = edges.select("src_id", "dst_id", "weight")
+        # lazy caches: step 1's two matvec jobs materialize each inside the
+        # job that first scans it (two eager setup counts were two extra jobs)
+        e_by_src = scope.cache(e.repartition(p, "src_id"))
+        e_by_dst = scope.cache(e.repartition(p, "dst_id"))
 
-def _hits_inner(
-    spark: SparkSession,
-    edges: DataFrame,
-    tol: float,
-    max_iter: int,
-    p: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    run_id: str,
-    metrics_sink: list | None,
-) -> tuple[DataFrame, int]:
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-        .persist()
-    )
-    n = verts.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, hub double, auth double"), 0
-
-    e = edges.select("src_id", "dst_id", "weight")
-    # lazy caches: step 1's two matvec jobs materialize each inside the
-    # job that first scans it (two eager setup counts were two extra jobs)
-    e_by_src = e.repartition(p, "src_id").persist()
-    e_by_dst = e.repartition(p, "dst_id").persist()
-
-    init = verts.select(
-        "id",
-        F.lit(1.0 / math.sqrt(n)).alias("hub"),
-        F.lit(0.0).alias("auth"),
-    )
-
-    def step_fn(state: DataFrame, step: int):
-        # -- auth half-step: scores shuffle to the src-partitioned edges
-        h = state.select("id", "hub").hint("shuffle_hash")
-        a_contribs = h.join(e_by_src, h.id == e_by_src.src_id).select(
-            "dst_id", (F.col("hub") * F.col("weight")).alias("c")
+        init = verts.select(
+            "id",
+            F.lit(1.0 / math.sqrt(n)).alias("hub"),
+            F.lit(0.0).alias("auth"),
         )
-        a_sums = a_contribs.groupBy("dst_id").agg(F.sum("c").alias("a_raw"))
-        # the state IS the vertex table: joining it (instead of a
-        # separate verts cache) carries prev_hub/prev_auth along for
-        # free, so the former third join against prev is gone.
-        a_tbl = (
-            state.join(
-                a_sums.hint("shuffle_hash"), state.id == a_sums.dst_id, "left"
+
+        def step_fn(state: DataFrame, step: int):
+            # -- auth half-step: scores shuffle to the src-partitioned edges
+            h = state.select("id", "hub").hint("shuffle_hash")
+            a_contribs = h.join(e_by_src, h.id == e_by_src.src_id).select(
+                "dst_id", (F.col("hub") * F.col("weight")).alias("c")
             )
-            .select(
+            a_sums = a_contribs.groupBy("dst_id").agg(F.sum("c").alias("a_raw"))
+            # the state IS the vertex table: joining it (instead of a
+            # separate verts cache) carries prev_hub/prev_auth along for
+            # free, so the former third join against prev is gone.
+            a_tbl = (
+                state.join(
+                    a_sums.hint("shuffle_hash"), state.id == a_sums.dst_id, "left"
+                )
+                .select(
+                    "id",
+                    F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a_raw"),
+                    F.col("hub").alias("prev_hub"),
+                    F.col("auth").alias("prev_auth"),
+                )
+                .localCheckpoint(eager=True)  # job 1: a_raw feeds two consumers
+            )
+
+            # -- hub half-step over the UN-normalized a_raw
+            a = a_tbl.select("id", "a_raw").hint("shuffle_hash")
+            t_contribs = a.join(e_by_dst, a.id == e_by_dst.dst_id).select(
+                "src_id", (F.col("a_raw") * F.col("weight")).alias("c")
+            )
+            t_sums = t_contribs.groupBy("src_id").agg(F.sum("c").alias("t_raw"))
+            raw = (
+                a_tbl.join(t_sums.hint("shuffle_hash"),
+                           a_tbl.id == t_sums.src_id, "left")
+                .select(
+                    a_tbl.id,
+                    "a_raw",
+                    F.coalesce(F.col("t_raw"), F.lit(0.0)).alias("t_raw"),
+                    "prev_hub",
+                    "prev_auth",
+                )
+                .localCheckpoint(eager=True)  # job 2: raw state for 2 consumers
+            )
+
+            # both L2 norms ride a 1-row BROADCAST AGG over the checkpointed
+            # raw state — in-plan, so there is no per-step norm collect and
+            # no per-step createDataFrame driver RPC (F.sqrt and the python
+            # math.sqrt it replaces are both IEEE correctly-rounded, so
+            # scores are bit-identical). Degenerate norms (edgeless after
+            # filtering) score to exact zeros via the when-guards.
+            norm_df = F.broadcast(
+                raw.agg(
+                    F.sqrt(
+                        F.coalesce(F.sum(F.col("a_raw") * F.col("a_raw")), F.lit(0.0))
+                    ).alias("na"),
+                    F.sqrt(
+                        F.coalesce(F.sum(F.col("t_raw") * F.col("t_raw")), F.lit(0.0))
+                    ).alias("nt"),
+                )
+            )
+            scored = raw.crossJoin(norm_df).select(
                 "id",
-                F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a_raw"),
-                F.col("hub").alias("prev_hub"),
-                F.col("auth").alias("prev_auth"),
-            )
-            .localCheckpoint(eager=True)  # job 1: a_raw feeds two consumers
-        )
-
-        # -- hub half-step over the UN-normalized a_raw
-        a = a_tbl.select("id", "a_raw").hint("shuffle_hash")
-        t_contribs = a.join(e_by_dst, a.id == e_by_dst.dst_id).select(
-            "src_id", (F.col("a_raw") * F.col("weight")).alias("c")
-        )
-        t_sums = t_contribs.groupBy("src_id").agg(F.sum("c").alias("t_raw"))
-        raw = (
-            a_tbl.join(t_sums.hint("shuffle_hash"),
-                       a_tbl.id == t_sums.src_id, "left")
-            .select(
-                a_tbl.id,
-                "a_raw",
-                F.coalesce(F.col("t_raw"), F.lit(0.0)).alias("t_raw"),
+                F.when(F.col("nt") != 0.0, F.col("t_raw") / F.col("nt"))
+                .otherwise(F.lit(0.0)).alias("hub"),
+                F.when(F.col("na") != 0.0, F.col("a_raw") / F.col("na"))
+                .otherwise(F.lit(0.0)).alias("auth"),
                 "prev_hub",
                 "prev_auth",
+                "na",
+                "nt",
             )
-            .localCheckpoint(eager=True)  # job 2: raw state for 2 consumers
-        )
+            # job 3: MATERIALIZE the scored state, with the L-inf deltas and
+            # norms riding along as observed metrics — the former separate
+            # stats agg re-executed the norm broadcast, and every later
+            # consumer of the lazy scored projection re-executed it again;
+            # the checkpoint pays the norm sub-job exactly once per step.
+            obs = Observation()
+            newc = (
+                scored.observe(
+                    obs,
+                    F.max(F.abs(F.col("hub") - F.col("prev_hub"))).alias("dh"),
+                    F.max(F.abs(F.col("auth") - F.col("prev_auth"))).alias("da"),
+                    F.min("na").alias("na"),
+                    F.min("nt").alias("nt"),
+                )
+                .select("id", "hub", "auth")
+                .localCheckpoint(eager=True)
+            )
+            m = obs.get
+            na, nt = float(m["na"] or 0.0), float(m["nt"] or 0.0)
+            if na == 0.0 or nt == 0.0:
+                # degenerate: zero scores ARE the fixpoint — converge now
+                # (newc is exactly the all-zero score table: both norm
+                # when-guards fell through to 0.0 for every row)
+                return newc, {"max_delta": 0.0, "na": na, "nt": nt}
+            return newc, {
+                "max_delta": max(float(m["dh"]), float(m["da"])),
+                "na": na,
+                "nt": nt,
+            }
 
-        # both L2 norms ride a 1-row BROADCAST AGG over the checkpointed
-        # raw state — in-plan, so there is no per-step norm collect and
-        # no per-step createDataFrame driver RPC (F.sqrt and the python
-        # math.sqrt it replaces are both IEEE correctly-rounded, so
-        # scores are bit-identical). Degenerate norms (edgeless after
-        # filtering) score to exact zeros via the when-guards.
-        norm_df = F.broadcast(
-            raw.agg(
-                F.sqrt(
-                    F.coalesce(F.sum(F.col("a_raw") * F.col("a_raw")), F.lit(0.0))
-                ).alias("na"),
-                F.sqrt(
-                    F.coalesce(F.sum(F.col("t_raw") * F.col("t_raw")), F.lit(0.0))
-                ).alias("nt"),
-            )
+        runner = SuperstepRunner(
+            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
+            checkpoint_every=checkpoint_every,
         )
-        scored = raw.crossJoin(norm_df).select(
-            "id",
-            F.when(F.col("nt") != 0.0, F.col("t_raw") / F.col("nt"))
-            .otherwise(F.lit(0.0)).alias("hub"),
-            F.when(F.col("na") != 0.0, F.col("a_raw") / F.col("na"))
-            .otherwise(F.lit(0.0)).alias("auth"),
-            "prev_hub",
-            "prev_auth",
-            "na",
-            "nt",
+        scores, steps = runner.run(
+            init,
+            step_fn,
+            converged=lambda m: m["max_delta"] < tol,
+            max_iter=max_iter,
+            resume=resume,
+            pre_truncated=True,  # step_fn checkpoints its own state
         )
-        # job 3: MATERIALIZE the scored state, with the L-inf deltas and
-        # norms riding along as observed metrics — the former separate
-        # stats agg re-executed the norm broadcast, and every later
-        # consumer of the lazy scored projection re-executed it again;
-        # the checkpoint pays the norm sub-job exactly once per step.
-        obs = Observation()
-        newc = (
-            scored.observe(
-                obs,
-                F.max(F.abs(F.col("hub") - F.col("prev_hub"))).alias("dh"),
-                F.max(F.abs(F.col("auth") - F.col("prev_auth"))).alias("da"),
-                F.min("na").alias("na"),
-                F.min("nt").alias("nt"),
-            )
-            .select("id", "hub", "auth")
-            .localCheckpoint(eager=True)
-        )
-        m = obs.get
-        na, nt = float(m["na"] or 0.0), float(m["nt"] or 0.0)
-        if na == 0.0 or nt == 0.0:
-            # degenerate: zero scores ARE the fixpoint — converge now
-            # (newc is exactly the all-zero score table: both norm
-            # when-guards fell through to 0.0 for every row)
-            return newc, {"max_delta": 0.0, "na": na, "nt": nt}
-        return newc, {
-            "max_delta": max(float(m["dh"]), float(m["da"])),
-            "na": na,
-            "nt": nt,
-        }
-
-    runner = SuperstepRunner(
-        spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
-    )
-    scores, steps = runner.run(
-        init,
-        step_fn,
-        converged=lambda m: m["max_delta"] < tol,
-        max_iter=max_iter,
-        resume=resume,
-        pre_truncated=True,  # step_fn checkpoints its own state
-    )
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    verts.unpersist()
-    e_by_src.unpersist()
-    e_by_dst.unpersist()
-    return scores.select("id", "hub", "auth"), steps
+        if metrics_sink is not None:
+            metrics_sink.extend(runner.history)
+        return scores.select("id", "hub", "auth"), steps

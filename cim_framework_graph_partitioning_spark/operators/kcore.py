@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 
@@ -93,11 +94,7 @@ def coreness(
 
     # loop-scoped conf BEFORE setup so the cached static table and the
     # init aggregation land on hash(key, p) partitioning directly
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
         # rename once: the init state derives from the same edge plan, so
         # the per-step join would otherwise be an ambiguous self-join.
         # ONE exchange: repartition by the probe key e_u, then dedup in
@@ -106,14 +103,13 @@ def coreness(
         e = edges.select("src_id", "dst_id").filter(
             F.col("src_id") != F.col("dst_id")
         )
-        und = (
+        und = scope.cache(
             e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
             .unionByName(
                 e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
             )
             .repartition(p, "e_u")
             .dropDuplicates(["e_v", "e_u"])
-            .persist()
         )
         und.count()
 
@@ -179,10 +175,6 @@ def coreness(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    und.unpersist()
+        if metrics_sink is not None:
+            metrics_sink.extend(runner.history)
     return cores.select("id", "core"), steps

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 from .edges import symmetrize
 
@@ -38,17 +39,12 @@ def label_propagation(
     bit-for-bit across partitionings.
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        und = symmetrize(edges).repartition(p, "src_id").persist()
-        verts = (
+    with loop_scope(spark, p) as scope:
+        und = scope.cache(symmetrize(edges).repartition(p, "src_id"))
+        verts = scope.cache(
             und.select(F.col("src_id").alias("id"))
             .unionByName(und.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         init = verts.select("id", F.col("id").alias("label"))
 
@@ -96,11 +92,6 @@ def label_propagation(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
-    verts.unpersist()
     return labels, steps
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 UNDECIDED, IN_MIS, EXCLUDED = 0, 1, 2
@@ -80,24 +81,19 @@ def maximal_independent_set(
     # loop-scoped conf BEFORE setup (same discipline as pagerank): the
     # cached static table and init land on hash(key, p) partitioning and
     # every per-step exchange is sized to the data, not the session.
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
         # ONE exchange: repartition by the probe key e_u, dedup in place
         # (hash(e_u) clusters every (e_v, e_u) group)
         e = edges.select("src_id", "dst_id").filter(
             F.col("src_id") != F.col("dst_id")
         )
-        und = (
+        und = scope.cache(
             e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
             .unionByName(
                 e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
             )
             .repartition(p, "e_u")
             .dropDuplicates(["e_v", "e_u"])
-            .persist()
         )
         und.count()
 
@@ -130,7 +126,7 @@ def maximal_independent_set(
             # exclusion propagation): a LAZY per-step persist makes the
             # single checkpoint job compute the local-min subtree once
             # instead of twice (released right after materialization)
-            joiners = (
+            joiners = scope.cache(
                 undec.join(nbr_min.hint("shuffle_hash"),
                            undec.id == nbr_min.v, "left")
                 .filter(
@@ -138,7 +134,6 @@ def maximal_independent_set(
                     | (F.struct(F.col("h"), F.col("id")) < F.col("min_nprio"))
                 )
                 .select("id")
-                .persist()
             )
             # neighbors of joiners (strict minima ⇒ never joiners themselves)
             j = joiners.select(F.col("id").alias("e_u")).hint("shuffle_hash")
@@ -180,10 +175,6 @@ def maximal_independent_set(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
     return (
         state.select("id", (F.col("status") == IN_MIS).alias("in_mis")),
         steps,

@@ -34,11 +34,6 @@ Two execution paths, identical semantics:
   per-block PARTIAL sums per dst — shuffle volume drops from one row
   per edge to one row per (block, distinct dst).
 
-* ``mode="csr_arrow"`` — same dataflow, but the per-superstep kernel is
-  ``applyInArrow`` (RecordBatch-native): the CSR list columns are read
-  as flat Arrow buffers, skipping the pandas object-array
-  materialization the csr path pays per superstep.
-
 Which is faster is MEASURED, not assumed (BENCH/CSR_CROSSOVER.md):
 csr wins ~2x in the mid-regime (~10M edges / 32 threads, skewed
 graphs); dataframe wins ~1.5x in the DRAM-bound regime (32M edges on
@@ -60,6 +55,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 
@@ -124,259 +120,202 @@ def pagerank(
     # groupBy exchanges produce p partitions and the per-superstep joins
     # then reuse them with zero re-exchange (AQE off for the same reason
     # it is off inside the loop — explicit partitioning, no re-planning).
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        return _pagerank_inner(
-            spark, edges, damping, tol, max_iter, mode, salted, salt_buckets,
-            p, csr_slice_edges, checkpoint_dir, checkpoint_every, resume,
-            run_id, metrics_sink, sources, init_ranks,
+    # Per-superstep exchanges are sized to p as well, not to the session's
+    # global shuffle_partitions (pure task overhead on small state).
+    with loop_scope(spark, p) as scope:
+        # verts + has_out in ONE aggregation pass (one exchange, map-side
+        # combined): endpoint rows tagged is_src, max(is_src) per id — the
+        # former distinct-union-distinct-join chain paid three exchanges for
+        # the same table (guide §2.4: remove shuffles outright).
+        ends = edges.select(F.col("src_id").alias("id"), F.lit(1).alias("is_src")).unionByName(
+            edges.select(F.col("dst_id").alias("id"), F.lit(0).alias("is_src"))
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-
-
-def _pagerank_inner(
-    spark: SparkSession,
-    edges: DataFrame,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    mode: str,
-    salted: bool,
-    salt_buckets: int,
-    p: int,
-    csr_slice_edges: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    run_id: str,
-    metrics_sink: list | None,
-    sources: DataFrame | None,
-    init_ranks: DataFrame | None,
-) -> tuple[DataFrame, int]:
-    # verts + has_out in ONE aggregation pass (one exchange, map-side
-    # combined): endpoint rows tagged is_src, max(is_src) per id — the
-    # former distinct-union-distinct-join chain paid three exchanges for
-    # the same table (guide §2.4: remove shuffles outright).
-    ends = edges.select(F.col("src_id").alias("id"), F.lit(1).alias("is_src")).unionByName(
-        edges.select(F.col("dst_id").alias("id"), F.lit(0).alias("is_src"))
-    )
-    verts = ends.groupBy("id").agg((F.max("is_src") == 1).alias("has_out"))
-    if sources is not None:
-        s = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
-        verts = verts.join(
-            F.broadcast(s.withColumn("_in_s", F.lit(True))), "id", "left"
-        ).select(
-            "id", "has_out", F.coalesce(F.col("_in_s"), F.lit(False)).alias("in_s")
-        )
-    else:
-        verts = verts.select("id", "has_out", F.lit(True).alias("in_s"))
-    verts = verts.persist()
-    n = verts.count()
-    if n == 0:
-        return spark.createDataFrame([], "id long, rank double"), 0
-    # teleport-set size: n for classic PageRank, |S ∩ verts| when
-    # personalized (the denominator of both teleport and dangling terms)
-    ns = (
-        n if sources is None
-        else verts.filter(F.col("in_s")).count()
-    )
-    if ns == 0:
-        raise ValueError("personalized pagerank: no source id is in the graph")
-
-    # norm via a window over the src_id exchange the cache needs anyway:
-    # one exchange total (the former groupBy+join+repartition chain paid
-    # two more for the identical frac values).
-    norm = edges.repartition(p, "src_id").select(
-        "src_id",
-        "dst_id",
-        (F.col("weight") / F.sum("weight").over(Window.partitionBy("src_id"))).alias("frac"),
-    )
-    if mode in ("csr", "csr_arrow"):
-        # hash-partition the (static, large) block table by its cogroup
-        # key ONCE: the per-superstep cogroup then reuses this exchange
-        # and only the rank side shuffles — the same static-side rule
-        # the dataframe path follows.
-        blocks = (
-            _pack_csr_blocks(norm, p, max_edges_per_slice=csr_slice_edges)
-            .repartition(p, "block")
-            .persist()
-        )
-        blocks.count()
-    else:
-        norm = norm.persist()
-        norm.count()
-
-    # state schema: (id, rank, has_out, in_s) — has_out/in_s ride IN the
-    # state so no per-superstep join against a separate verts table is
-    # needed (one fewer state-sized join per step).
-    init = verts.select(
-        "id",
-        F.when(F.col("in_s"), F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias("rank"),
-        "has_out",
-        "in_s",
-    )
-    if init_ranks is not None:
-        r0 = init_ranks.select(
-            F.col(init_ranks.columns[0]).alias("id"),
-            F.col(init_ranks.columns[1]).cast("double").alias("_r0"),
-        )
-        warm = verts.join(r0, "id", "left").select(
-            "id",
-            F.coalesce(F.col("_r0"), F.lit(0.0)).alias("_r0"),
-            "in_s",
-            "has_out",
-        )
-        # L1-renormalize in-plan (1-row broadcast agg, no driver collect);
-        # degenerate all-zero init falls back to the uniform start
-        tot = F.broadcast(warm.agg(F.sum("_r0").alias("_tot")))
-        init = warm.crossJoin(tot).select(
-            "id",
-            F.when(F.col("_tot") > 0.0, F.col("_r0") / F.col("_tot"))
-            .otherwise(
-                F.when(F.col("in_s"), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
+        verts = ends.groupBy("id").agg((F.max("is_src") == 1).alias("has_out"))
+        if sources is not None:
+            s = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
+            verts = verts.join(
+                F.broadcast(s.withColumn("_in_s", F.lit(True))), "id", "left"
+            ).select(
+                "id", "has_out", F.coalesce(F.col("_in_s"), F.lit(False)).alias("in_s")
             )
-            .alias("rank"),
-            "has_out",
-            "in_s",
-        )
-
-    import os as _os
-    import time as _time
-    _trace = _os.environ.get("PAGERANK_TRACE") == "1"
-
-    def step_fn(ranks: DataFrame, step: int):
-        _t = _time.monotonic()
-
-        def _mark(label):
-            nonlocal _t
-            if _trace:
-                now = _time.monotonic()
-                print(f"    step {step} {label}: {now - _t:.2f}s", flush=True)
-                _t = now
-        if mode == "csr":
-            sums = _csr_contributions(ranks.select("id", "rank"), blocks, p)
-        elif mode == "csr_arrow":
-            sums = _csr_contributions_arrow(ranks.select("id", "rank"), blocks, p)
         else:
-            # shuffle-hash, not sort-merge: the cached edge table must
-            # not be re-sorted every superstep (measured 1.8x/step), and
-            # the rank table is never broadcastable at the target scale.
-            r = ranks.select("id", "rank").hint("shuffle_hash")
-            contribs = r.join(norm, r.id == norm.src_id).select(
-                "src_id", "dst_id", (F.col("rank") * F.col("frac")).alias("contrib")
-            )
-            if salted:
-                # explicit two-phase aggregation: partial per (dst, salt)
-                # bounds a hub reducer to 1/salt_buckets of its inflow.
-                # The salt MUST key on the edge (src_id, dst_id), never on
-                # the value being summed: identical contributions into a
-                # hub (uniform early ranks x equal frac) would otherwise
-                # all hash to ONE bucket and the skew protection would
-                # evaporate exactly when needed.
-                partial = contribs.groupBy(
-                    "dst_id",
-                    pagerank_salt_col(salt_buckets),
-                ).agg(F.sum("contrib").alias("partial"))
-                sums = partial.groupBy("dst_id").agg(F.sum("partial").alias("s"))
-            else:
-                sums = contribs.groupBy("dst_id").agg(F.sum("contrib").alias("s"))
+            verts = verts.select("id", "has_out", F.lit(True).alias("in_s"))
+        verts = scope.cache(verts)
+        n = verts.count()
+        if n == 0:
+            return spark.createDataFrame([], "id long, rank double"), 0
+        # teleport-set size: n for classic PageRank, |S ∩ verts| when
+        # personalized (the denominator of both teleport and dangling terms)
+        ns = (
+            n if sources is None
+            else verts.filter(F.col("in_s")).count()
+        )
+        if ns == 0:
+            raise ValueError("personalized pagerank: no source id is in the graph")
 
-        # base rides in a 1-row BROADCAST AGG of the current state, NOT
-        # a literal (per-step literals defeat the whole-stage-codegen
-        # cache — a serial driver recompile every step) and NOT a
-        # driver-round-tripped createDataFrame (measured 0.15-0.18s of
-        # per-step driver RPC): the dangling mass stays in-plan, the
-        # broadcast stage scans the cached checkpointed state, and
-        # resume-from-checkpoint sees the right value by construction.
-        # Arithmetic mirrors the former python expression term for term
-        # ((1-d)/ns constant + d * dang / ns), so results are bit-equal.
-        base_df = F.broadcast(
-            ranks.agg(
-                (
-                    F.lit((1.0 - damping) / ns)
-                    + F.lit(damping)
-                    * F.coalesce(
-                        F.sum(F.when(~F.col("has_out"), F.col("rank"))),
-                        F.lit(0.0),
-                    )
-                    / F.lit(float(ns))
-                ).alias("base")
+        # norm via a window over the src_id exchange the cache needs anyway:
+        # one exchange total (the former groupBy+join+repartition chain paid
+        # two more for the identical frac values).
+        norm = edges.repartition(p, "src_id").select(
+            "src_id",
+            "dst_id",
+            (F.col("weight") / F.sum("weight").over(Window.partitionBy("src_id"))).alias("frac"),
+        )
+        if mode == "csr":
+            # hash-partition the (static, large) block table by its cogroup
+            # key ONCE: the per-superstep cogroup then reuses this exchange
+            # and only the rank side shuffles — the same static-side rule
+            # the dataframe path follows.
+            blocks = scope.cache(
+                _pack_csr_blocks(norm, p, max_edges_per_slice=csr_slice_edges)
+                .repartition(p, "block")
             )
+            blocks.count()
+        else:
+            norm = scope.cache(norm)
+            norm.count()
+
+        # state schema: (id, rank, has_out, in_s) — has_out/in_s ride IN the
+        # state so no per-superstep join against a separate verts table is
+        # needed (one fewer state-sized join per step).
+        init = verts.select(
+            "id",
+            F.when(F.col("in_s"), F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias("rank"),
+            "has_out",
+            "in_s",
         )
-        # teleport lands only on the source set; the classic uniform
-        # path keeps its original branch-free expression
-        tele = (
-            F.col("base")
-            if sources is None
-            else F.when(F.col("in_s"), F.col("base")).otherwise(F.lit(0.0))
-        )
-        # the state itself is the vertex table (it carries every vertex
-        # plus has_out/in_s), so the new rank is one left join of state
-        # with sums — no separate verts join, no separate prev join.
-        new_ranks = (
-            ranks.join(sums.hint("shuffle_hash"), ranks.id == sums.dst_id, "left")
-            .crossJoin(base_df)
-            .select(
+        if init_ranks is not None:
+            r0 = init_ranks.select(
+                F.col(init_ranks.columns[0]).alias("id"),
+                F.col(init_ranks.columns[1]).cast("double").alias("_r0"),
+            )
+            warm = verts.join(r0, "id", "left").select(
                 "id",
-                (tele + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
+                F.coalesce(F.col("_r0"), F.lit(0.0)).alias("_r0"),
+                "in_s",
+                "has_out",
+            )
+            # L1-renormalize in-plan (1-row broadcast agg, no driver collect);
+            # degenerate all-zero init falls back to the uniform start
+            tot = F.broadcast(warm.agg(F.sum("_r0").alias("_tot")))
+            init = warm.crossJoin(tot).select(
+                "id",
+                F.when(F.col("_tot") > 0.0, F.col("_r0") / F.col("_tot"))
+                .otherwise(
+                    F.when(F.col("in_s"), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
+                )
+                .alias("rank"),
                 "has_out",
                 "in_s",
-                F.col("rank").alias("prev"),
             )
-        )
-        _mark("plan_build")
-        # ONE job per superstep: the convergence stats ride the
-        # checkpoint materialization as observed metrics (max/sum are
-        # the same aggregates the former second job computed), and the
-        # checkpointed state drops the prev column.
-        obs = Observation()
-        newc = (
-            new_ranks.observe(
-                obs,
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"),
-                F.sum(
-                    F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            )
-            .select("id", "rank", "has_out", "in_s")
-            .localCheckpoint(eager=True)
-        )
-        m = obs.get
-        _mark("localCheckpoint+stats")
-        return (
-            newc,
-            {"max_delta": float(m["d"]), "dangling_mass": float(m["dm"] or 0.0)},
-        )
 
-    runner = SuperstepRunner(
-        spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
-    )
-    # AQE off + shuffle partitions = p for setup AND loop: hoisted to
-    # pagerank() so the cached static tables and every per-superstep
-    # exchange share the same explicit hash(key, p) partitioning (the
-    # per-superstep groupBy/join exchanges would otherwise fan out to
-    # the session's global shuffle_partitions — pure task-scheduling
-    # overhead repeated every superstep on small state; map-side partial
-    # aggregation is unaffected, this only sizes post-combine exchanges).
-    ranks, steps = runner.run(
-        init,
-        step_fn,
-        converged=lambda m: m["max_delta"] < tol,
-        max_iter=max_iter,
-        resume=resume,
-        pre_truncated=True,
-    )
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    verts.unpersist()
-    (blocks if mode in ("csr", "csr_arrow") else norm).unpersist()
-    return ranks.select("id", "rank"), steps
+        def step_fn(ranks: DataFrame, step: int):
+            if mode == "csr":
+                sums = _csr_contributions(ranks.select("id", "rank"), blocks, p)
+            else:
+                # shuffle-hash, not sort-merge: the cached edge table must
+                # not be re-sorted every superstep (measured 1.8x/step), and
+                # the rank table is never broadcastable at the target scale.
+                r = ranks.select("id", "rank").hint("shuffle_hash")
+                contribs = r.join(norm, r.id == norm.src_id).select(
+                    "src_id", "dst_id", (F.col("rank") * F.col("frac")).alias("contrib")
+                )
+                if salted:
+                    # explicit two-phase aggregation: partial per (dst, salt)
+                    # bounds a hub reducer to 1/salt_buckets of its inflow.
+                    # The salt MUST key on the edge (src_id, dst_id), never on
+                    # the value being summed: identical contributions into a
+                    # hub (uniform early ranks x equal frac) would otherwise
+                    # all hash to ONE bucket and the skew protection would
+                    # evaporate exactly when needed.
+                    partial = contribs.groupBy(
+                        "dst_id",
+                        pagerank_salt_col(salt_buckets),
+                    ).agg(F.sum("contrib").alias("partial"))
+                    sums = partial.groupBy("dst_id").agg(F.sum("partial").alias("s"))
+                else:
+                    sums = contribs.groupBy("dst_id").agg(F.sum("contrib").alias("s"))
+
+            # base rides in a 1-row BROADCAST AGG of the current state, NOT
+            # a literal (per-step literals defeat the whole-stage-codegen
+            # cache — a serial driver recompile every step) and NOT a
+            # driver-round-tripped createDataFrame (measured 0.15-0.18s of
+            # per-step driver RPC): the dangling mass stays in-plan, the
+            # broadcast stage scans the cached checkpointed state, and
+            # resume-from-checkpoint sees the right value by construction.
+            # Arithmetic mirrors the former python expression term for term
+            # ((1-d)/ns constant + d * dang / ns), so results are bit-equal.
+            base_df = F.broadcast(
+                ranks.agg(
+                    (
+                        F.lit((1.0 - damping) / ns)
+                        + F.lit(damping)
+                        * F.coalesce(
+                            F.sum(F.when(~F.col("has_out"), F.col("rank"))),
+                            F.lit(0.0),
+                        )
+                        / F.lit(float(ns))
+                    ).alias("base")
+                )
+            )
+            # teleport lands only on the source set; the classic uniform
+            # path keeps its original branch-free expression
+            tele = (
+                F.col("base")
+                if sources is None
+                else F.when(F.col("in_s"), F.col("base")).otherwise(F.lit(0.0))
+            )
+            # the state itself is the vertex table (it carries every vertex
+            # plus has_out/in_s), so the new rank is one left join of state
+            # with sums — no separate verts join, no separate prev join.
+            new_ranks = (
+                ranks.join(sums.hint("shuffle_hash"), ranks.id == sums.dst_id, "left")
+                .crossJoin(base_df)
+                .select(
+                    "id",
+                    (tele + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
+                    "has_out",
+                    "in_s",
+                    F.col("rank").alias("prev"),
+                )
+            )
+            # ONE job per superstep: the convergence stats ride the
+            # checkpoint materialization as observed metrics (max/sum are
+            # the same aggregates the former second job computed), and the
+            # checkpointed state drops the prev column.
+            obs = Observation()
+            newc = (
+                new_ranks.observe(
+                    obs,
+                    F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"),
+                    F.sum(
+                        F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
+                    ).alias("dm"),
+                )
+                .select("id", "rank", "has_out", "in_s")
+                .localCheckpoint(eager=True)
+            )
+            m = obs.get
+            return (
+                newc,
+                {"max_delta": float(m["d"]), "dangling_mass": float(m["dm"] or 0.0)},
+            )
+
+        runner = SuperstepRunner(
+            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
+            checkpoint_every=checkpoint_every,
+        )
+        ranks, steps = runner.run(
+            init,
+            step_fn,
+            converged=lambda m: m["max_delta"] < tol,
+            max_iter=max_iter,
+            resume=resume,
+            pre_truncated=True,
+        )
+        if metrics_sink is not None:
+            metrics_sink.extend(runner.history)
+        return ranks.select("id", "rank"), steps
 
 
 # --- CSR fast path -------------------------------------------------------
@@ -465,63 +404,5 @@ def _csr_contributions(ranks: DataFrame, blocks: DataFrame, p: int) -> DataFrame
         ranks_b.groupBy("block")
         .cogroup(blocks.groupBy("block"))
         .applyInPandas(kernel, "dst_id long, s double")
-    )
-    return partial.groupBy("dst_id").agg(F.sum("s").alias("s"))
-
-
-def _csr_contributions_arrow(ranks: DataFrame, blocks: DataFrame, p: int) -> DataFrame:
-    """Arrow-native CSR kernel: cogroup(...).applyInArrow consumes the
-    RecordBatches directly (no pandas materialization of the list
-    columns — the hop BENCH/CSR_CROSSOVER.md measured as the csr path's
-    cost in the DRAM-bound regime). List columns are flattened ONCE per
-    call via ListArray.values/offsets; all math runs on the flat numpy
-    views."""
-    import pyarrow as pa
-
-    empty = pa.schema([("dst_id", pa.int64()), ("s", pa.float64())])
-
-    def kernel(key, rank_tbl: pa.Table, block_tbl: pa.Table) -> pa.Table:
-        if rank_tbl.num_rows == 0 or block_tbl.num_rows == 0:
-            return empty.empty_table()
-        rid = rank_tbl.column("id").to_numpy()
-        rv = rank_tbl.column("rank").to_numpy()
-        order = np.argsort(rid, kind="mergesort")
-        rid_s, rv_s = rid[order], rv[order]
-
-        def flat(col):
-            c = block_tbl.column(col).combine_chunks()
-            return c.values.to_numpy(zero_copy_only=False), c.offsets.to_numpy()
-
-        src_v, src_o = flat("src_ids")
-        ind_v, ind_o = flat("indptr")
-        dst_v, _ = flat("dst_ids")
-        frac_v, _ = flat("frac")
-        # per-src edge counts: within each slice row, diff(indptr); the
-        # concatenation order of src/dst/frac values matches row order,
-        # so per-edge expansion can run on the flat arrays in one pass.
-        counts = np.diff(ind_v)
-        keep = np.ones(len(counts), dtype=bool)
-        keep[ind_o[1:-1] - 1] = False  # drop the seams between rows
-        counts = counts[keep]
-        pos = np.searchsorted(rid_s, src_v)
-        per_edge = np.repeat(rv_s[pos], counts) * frac_v
-        udst, inv = np.unique(dst_v, return_inverse=True)
-        s = np.bincount(inv, weights=per_edge, minlength=len(udst))
-        out = pa.table({"dst_id": pa.array(udst, pa.int64()),
-                        "s": pa.array(s, pa.float64())})
-        # Reused python workers accumulate RSS across supersteps: the
-        # Arrow memory pool RETAINS the per-call list-column copies
-        # (measured: per-step time grew 8.5 -> 141.8s within one 32M-edge
-        # run; spark.python.worker.reuse=false made it stable). Hand the
-        # freed buffers back to the OS before returning.
-        del src_v, ind_v, dst_v, frac_v, per_edge, counts, pos, inv
-        pa.default_memory_pool().release_unused()
-        return out
-
-    ranks_b = ranks.withColumn("block", F.pmod(F.xxhash64("id"), F.lit(p)).cast("int"))
-    partial = (
-        ranks_b.groupBy("block")
-        .cogroup(blocks.groupBy("block"))
-        .applyInArrow(kernel, "dst_id long, s double")
     )
     return partial.groupBy("dst_id").agg(F.sum("s").alias("s"))

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 
@@ -129,11 +130,8 @@ def shortest_paths(
         spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
         checkpoint_every=checkpoint_every,
     )
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
+        scope.cache(e)
         out, steps = runner.run(
             init,
             step_fn,
@@ -142,10 +140,6 @@ def shortest_paths(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
     if metrics_sink is not None:
         metrics_sink.extend(runner.history)
-    e.unpersist()
     return out.select("id", "dist"), steps

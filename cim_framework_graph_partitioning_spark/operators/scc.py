@@ -66,6 +66,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 
 
 def strongly_connected_components(
@@ -107,19 +108,11 @@ def strongly_connected_components(
     # 2.3x/step on the pagerank loop) and shuffle partitions = p (the
     # fixpoint joins otherwise exchange at the session-global count —
     # pure task overhead for a small remainder graph). Restored on exit.
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
+        scope.cache(e_all)
         result = _scc_rounds(
             spark, e_all, remaining, max_rounds, max_iter, p, salt, fuse_steps
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-
-    e_all.unpersist()
     if result is None:
         return spark.createDataFrame([], "id long, scc_id long")
     # relabel: scc_id = min member id (algorithm-independent contract)
@@ -137,8 +130,7 @@ def _scc_rounds(
     salt: int,
     fuse_steps: int,
 ) -> DataFrame | None:
-    """The peel loop of strongly_connected_components (split out so the
-    caller can scope loop-wide session conf around it)."""
+    """The peel loop of strongly_connected_components."""
     barrier = PlanBarrier(spark, tag="scc")
     result: DataFrame | None = None
     rounds = 0

@@ -149,6 +149,7 @@ def neighborhood_sketches(
     """
     from ..plans.barrier import release_checkpoint
     from ..plans.scale import auto_blocks
+    from ..plans.scope import loop_scope
     from .kcore import undirected_edges
 
     p = num_blocks or auto_blocks(
@@ -180,9 +181,8 @@ def neighborhood_sketches(
             F.array_distinct(F.array_sort(F.flatten(col))), 1, k
         )
 
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p, keep_aqe=True) as scope:
+        scope.cache(und)
         for _round in range(t):
             s = state.hint("shuffle_hash")
             nbr = s.join(und, s.id == und.e_u).select(
@@ -204,9 +204,6 @@ def neighborhood_sketches(
             new_state = merged.localCheckpoint(eager=True)
             release_checkpoint(state)
             state = new_state
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
 
     n_sk = F.size("sk")
     kth = F.when(n_sk >= k, F.element_at("sk", k))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 
 
@@ -57,122 +58,102 @@ def label_spreading(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup; caches released in the finally
-    # (they used to leak on a runner exception — ADVICE r5)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        return _label_spreading_inner(
-            spark, edges, seeds, alpha, tol, max_iter, p, checkpoint_dir,
-            checkpoint_every, resume, run_id, metrics_sink,
+    # loop-scoped conf BEFORE setup, so the cached static tables land on
+    # hash(key, p) partitioning directly
+    with loop_scope(spark, p) as scope:
+        e = edges.filter(F.col("src_id") != F.col("dst_id")).select(
+            F.least("src_id", "dst_id").alias("a"),
+            F.greatest("src_id", "dst_id").alias("b"),
+            "weight",
+        ).groupBy("a", "b").agg(F.sum("weight").alias("w"))
+        und = e.select(
+            F.col("a").alias("src_id"), F.col("b").alias("dst_id"), "w"
+        ).unionByName(
+            e.select(F.col("b").alias("src_id"), F.col("a").alias("dst_id"), "w")
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-
-
-def _label_spreading_inner(
-    spark, edges, seeds, alpha, tol, max_iter, p, checkpoint_dir,
-    checkpoint_every, resume, run_id, metrics_sink,
-):
-    e = edges.filter(F.col("src_id") != F.col("dst_id")).select(
-        F.least("src_id", "dst_id").alias("a"),
-        F.greatest("src_id", "dst_id").alias("b"),
-        "weight",
-    ).groupBy("a", "b").agg(F.sum("weight").alias("w"))
-    und = e.select(
-        F.col("a").alias("src_id"), F.col("b").alias("dst_id"), "w"
-    ).unionByName(
-        e.select(F.col("b").alias("src_id"), F.col("a").alias("dst_id"), "w")
-    )
-    deg = und.groupBy(F.col("src_id").alias("id")).agg(
-        F.sum("w").alias("d")
-    )
-    # S = D^-1/2 W D^-1/2, cached partitioned by src (the join key of
-    # the propagation half-step) — built once, never re-exchanged
-    norm = (
-        und.join(deg.select(F.col("id").alias("src_id"),
-                            F.col("d").alias("d_src")), "src_id")
-        .join(deg.select(F.col("id").alias("dst_id"),
-                         F.col("d").alias("d_dst")), "dst_id")
-        .select(
-            "src_id", "dst_id",
-            (F.col("w") / F.sqrt(F.col("d_src") * F.col("d_dst"))).alias("s"),
+        deg = und.groupBy(F.col("src_id").alias("id")).agg(
+            F.sum("w").alias("d")
         )
-        .repartition(p, "src_id")
-        .persist()
-    )
-    norm.count()
-
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    y = (
-        seeds.select(
-            F.col(seeds.columns[0]).alias("id"),
-            F.col(seeds.columns[1]).alias("label"),
-        )
-        .distinct()
-        .join(verts, "id", "left_semi")
-        .select("id", "label", F.lit(1.0).alias("y"))
-        .repartition(p, "id")
-        .persist()
-    )
-    if y.count() == 0:
-        return (
-            spark.createDataFrame([], "id long, label long, score double"),
-            0,
-        )
-    init = y.select("id", "label", F.col("y").alias("score"))
-
-    def step_fn(state: DataFrame, step: int):
-        st = state.select("id", "label", "score").hint("shuffle_hash")
-        prop = (
-            st.join(norm, st.id == norm.src_id)
+        # S = D^-1/2 W D^-1/2, cached partitioned by src (the join key of
+        # the propagation half-step) — built once, never re-exchanged
+        norm = scope.cache(
+            und.join(deg.select(F.col("id").alias("src_id"),
+                                F.col("d").alias("d_src")), "src_id")
+            .join(deg.select(F.col("id").alias("dst_id"),
+                             F.col("d").alias("d_dst")), "dst_id")
             .select(
-                F.col("dst_id").alias("id"), "label",
-                (F.col("score") * F.col("s")).alias("c"),
+                "src_id", "dst_id",
+                (F.col("w") / F.sqrt(F.col("d_src") * F.col("d_dst"))).alias("s"),
             )
-            .groupBy("id", "label")
-            .agg(F.sum("c").alias("prop"))
+            .repartition(p, "src_id")
         )
-        new = (
-            prop.join(y.hint("shuffle_hash"), ["id", "label"], "full_outer")
-            .select(
-                "id", "label",
-                (
-                    F.lit(alpha) * F.coalesce(F.col("prop"), F.lit(0.0))
-                    + F.lit(1.0 - alpha) * F.coalesce(F.col("y"), F.lit(0.0))
-                ).alias("score"),
-            )
-            .join(
-                state.select(
-                    "id", "label", F.col("score").alias("prev")
-                ).hint("shuffle_hash"),
-                ["id", "label"], "left",
-            )
-            .observe(
-                obs := Observation(),
-                F.max(
-                    F.abs(F.col("score") - F.coalesce(F.col("prev"), F.lit(0.0)))
-                ).alias("d"),
-            )
-            .select("id", "label", "score")
-            .localCheckpoint(eager=True)
-        )
-        # delta rides the checkpoint as an observed metric — the former
-        # separate stats job per superstep is gone (pagerank pattern)
-        return new, {"max_delta": float(obs.get["d"] or 0.0)}
+        norm.count()
 
-    runner = SuperstepRunner(
-        spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
-    )
-    try:
+        verts = (
+            edges.select(F.col("src_id").alias("id"))
+            .unionByName(edges.select(F.col("dst_id").alias("id")))
+            .distinct()
+        )
+        y = scope.cache(
+            seeds.select(
+                F.col(seeds.columns[0]).alias("id"),
+                F.col(seeds.columns[1]).alias("label"),
+            )
+            .distinct()
+            .join(verts, "id", "left_semi")
+            .select("id", "label", F.lit(1.0).alias("y"))
+            .repartition(p, "id")
+        )
+        if y.count() == 0:
+            return (
+                spark.createDataFrame([], "id long, label long, score double"),
+                0,
+            )
+        init = y.select("id", "label", F.col("y").alias("score"))
+
+        def step_fn(state: DataFrame, step: int):
+            st = state.select("id", "label", "score").hint("shuffle_hash")
+            prop = (
+                st.join(norm, st.id == norm.src_id)
+                .select(
+                    F.col("dst_id").alias("id"), "label",
+                    (F.col("score") * F.col("s")).alias("c"),
+                )
+                .groupBy("id", "label")
+                .agg(F.sum("c").alias("prop"))
+            )
+            new = (
+                prop.join(y.hint("shuffle_hash"), ["id", "label"], "full_outer")
+                .select(
+                    "id", "label",
+                    (
+                        F.lit(alpha) * F.coalesce(F.col("prop"), F.lit(0.0))
+                        + F.lit(1.0 - alpha) * F.coalesce(F.col("y"), F.lit(0.0))
+                    ).alias("score"),
+                )
+                .join(
+                    state.select(
+                        "id", "label", F.col("score").alias("prev")
+                    ).hint("shuffle_hash"),
+                    ["id", "label"], "left",
+                )
+                .observe(
+                    obs := Observation(),
+                    F.max(
+                        F.abs(F.col("score") - F.coalesce(F.col("prev"), F.lit(0.0)))
+                    ).alias("d"),
+                )
+                .select("id", "label", "score")
+                .localCheckpoint(eager=True)
+            )
+            # delta rides the checkpoint as an observed metric — the former
+            # separate stats job per superstep is gone (pagerank pattern)
+            return new, {"max_delta": float(obs.get["d"] or 0.0)}
+
+        runner = SuperstepRunner(
+            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
+            checkpoint_every=checkpoint_every,
+        )
         scores, steps = runner.run(
             init,
             step_fn,
@@ -181,10 +162,6 @@ def _label_spreading_inner(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        # release the static caches even on a runner exception
-        norm.unpersist()
-        y.unpersist()
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    return scores.select("id", "label", "score"), steps
+        if metrics_sink is not None:
+            metrics_sink.extend(runner.history)
+        return scores.select("id", "label", "score"), steps

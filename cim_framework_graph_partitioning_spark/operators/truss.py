@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.scope import loop_scope
 from ..plans.superstep import SuperstepRunner
 from .triangles import _closed_wedges, _simple_undirected
 
@@ -207,11 +208,12 @@ def trussness(
         spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
         checkpoint_every=checkpoint_every,
     )
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
+        scope.cache(inc)
+        # the und and oriented-wedge checkpoints outlive a successful
+        # loop (the result reads und); a failed one drops them
+        scope.release_on_error(und)
+        scope.release_on_error(inc_rows)
         vals, steps = runner.run(
             init,
             step_fn,
@@ -220,9 +222,6 @@ def trussness(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
     if metrics_sink is not None:
         metrics_sink.extend(runner.history)
     # zero-support edges re-enter here: vals (checkpointed by the
@@ -237,5 +236,4 @@ def trussness(
         .cast("long")
         .alias("trussness"),
     )
-    inc.unpersist()
     return out, steps

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
 from cim_framework_graph_partitioning_spark.operators.edges import (
@@ -97,6 +98,37 @@ def test_extract_refs_jvm_matches_pandas_reference(spark):
         "lang", extract_refs_pandas(F.col("content"), F.col("lang")).alias("r")
     ).collect()
     assert [(r.lang, r.r) for r in got] == [(r.lang, r.r) for r in want]
+
+    # Line-break and whitespace edge cases. The DuckDB oracle's RE2 is the
+    # spec: \s is [\t\n\f\r ] (no \x0B, no U+00A0) and ^ follows only \n.
+    edge_rows = [
+        ("x = 1\rimport os", []),
+        ("\u00a0import sys", []),
+        ("a\u2028import json", []),
+        ("\x0bimport vt", []),
+        ("\x0cimport ff", ["ff"]),
+    ]
+    edf = spark.createDataFrame(
+        [("python", c) for c, _ in edge_rows], "lang string, content string"
+    )
+    jvm = [r.r for r in edf.select(
+        extract_refs(F.col("content"), F.col("lang")).alias("r")
+    ).collect()]
+    pdf = [r.r for r in edf.select(
+        extract_refs_pandas(F.col("content"), F.col("lang")).alias("r")
+    ).collect()]
+    # the python pattern of queries.py _SQL_CORPUS_EDGES, verbatim
+    oracle_rx = r"(?m)^\s*(?:import|from)\s+([A-Za-z_][A-Za-z0-9_.]*)"
+    con = duckdb.connect()
+    duck = [
+        con.execute("SELECT regexp_extract_all(?, ?, 1)", [c, oracle_rx]).fetchone()[0]
+        for c, _ in edge_rows
+    ]
+    want_edge = [w for _, w in edge_rows]
+    assert duck == want_edge
+    assert jvm == want_edge
+    assert pdf == want_edge
+
     # and on the full synthesized corpus, all 7 languages at once
     files = synthesize_corpus(spark, n_files=300, n_repos=6, seed=11)
     a = files.select(
