@@ -2,36 +2,14 @@
 
 The reference keeps config as mutable module globals consumed via
 ``import cimpara as cp`` (reference: cimpara.py:6-29, run.py:56-63).
-Here it is an immutable dataclass passed explicitly, plus Spark conf.
+Here each operator takes its tunables as keyword arguments (the CLI in
+``main.py`` maps flags onto them) and the session-wide knobs live in
+Spark conf (``session.py``), sized from ``default_parallelism``.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
-
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Tunables for the graph engine.
-
-    Scale notes (100 TB / 1000-executor design intent):
-    - ``shuffle_partitions`` should be ~2-3x total cores on a real
-      cluster; locally we match core count.
-    - ``checkpoint_every`` bounds iterative lineage growth (SURVEY §4.3):
-      every N supersteps state is materialized and re-read, which also
-      provides resumability.
-    - ``hub_degree_threshold`` / ``salt_buckets`` drive explicit skew
-      handling for power-law hubs (salted two-phase aggregation).
-    """
-
-    damping: float = 0.85
-    tol: float = 1e-6
-    max_iter: int = 200
-    checkpoint_every: int = 1
-    hub_degree_threshold: int = 10_000
-    salt_buckets: int = 16
-    seed: int = 42
 
 
 def default_parallelism() -> int:

@@ -23,28 +23,20 @@ bipartite-walk scores are meaningful on them):
   L1-normalized — no per-step norm scalar, one fewer barrier than
   HITS, and the SQL oracle replays the same dataflow verbatim.
 
-Scale shape (same discipline as pagerank.py / hits.py):
-
-* The edge table is normalized ONCE (fractions w/wout and w/win are
-  static) and cached hash-partitioned by the join key of its half-step
-  — src_id for the forward (authority / Katz) pass, dst_id for the hub
-  pass — so only the score table shuffles per superstep; the static
-  100-TB edge cache is never re-exchanged.
-* shuffle_hash hints pin SHJ (no per-step re-sort of the cache).
-* Per-superstep driver traffic is one L-inf delta scalar; state is
-  localCheckpointed via SuperstepRunner (durable checkpoints +
-  per-partition lineage + metrics → resumable mid-convergence, north
-  rule).
+Both are plans/matvec.py's weighted-matvec superstep: Katz over the raw
+weights, SALSA over the two normalized transition tables (w/wout cached
+by src_id, w/win by dst_id).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.barrier import checkpoint_leaf_ids, release_checkpoint
+from ..plans.matvec import edge_side, fixpoint, half_step
 from ..plans.scale import auto_blocks
 from ..plans.scope import loop_scope
-from ..plans.superstep import SuperstepRunner
 
 
 def katz_centrality(
@@ -83,58 +75,29 @@ def katz_centrality(
         n = verts.count()
         if n == 0:
             return spark.createDataFrame([], "id long, katz double"), 0
-        e_by_src = scope.cache(
-            edges.select("src_id", "dst_id", "weight").repartition(p, "src_id")
-        )
+        e_by_src = edge_side(scope, edges, p, "src_id")
         e_by_src.count()
 
         init = verts.select("id", F.lit(beta).alias("katz"))
 
-        def step_fn(state: DataFrame, step: int):
-            x = state.select("id", "katz").hint("shuffle_hash")
-            sums = (
-                x.join(e_by_src, x.id == e_by_src.src_id)
-                .select("dst_id", (F.col("katz") * F.col("weight")).alias("c"))
-                .groupBy("dst_id")
-                .agg(F.sum("c").alias("s"))
+        def update(state: DataFrame, _cut) -> DataFrame:
+            # the state IS the vertex table — one left join with the sums
+            # carries prev along
+            sums = half_step(state, "katz", e_by_src)
+            return state.join(sums.hint("shuffle_hash"), "id", "left").select(
+                "id",
+                (
+                    F.lit(beta)
+                    + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))
+                ).alias("katz"),
+                F.col("katz").alias("prev_katz"),
             )
-            # the state IS the vertex table — one left join with the
-            # sums carries prev along; delta rides the checkpoint as an
-            # observed metric (one job per superstep, pagerank pattern)
-            obs = Observation()
-            new = (
-                state.join(sums.hint("shuffle_hash"), state.id == sums.dst_id, "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(beta)
-                        + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))
-                    ).alias("katz"),
-                    F.col("katz").alias("prev"),
-                )
-                .observe(
-                    obs, F.max(F.abs(F.col("katz") - F.col("prev"))).alias("d")
-                )
-                .select("id", "katz")
-                .localCheckpoint(eager=True)
-            )
-            return new, {"max_delta": float(obs.get["d"] or 0.0)}
 
-        runner = SuperstepRunner(
-            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+        return fixpoint(
+            spark, init, update, tol=tol, max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+            resume=resume, run_id=run_id, metrics_sink=metrics_sink,
         )
-        scores, steps = runner.run(
-            init,
-            step_fn,
-            converged=lambda m: m["max_delta"] < tol,
-            max_iter=max_iter,
-            resume=resume,
-            pre_truncated=True,
-        )
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    return scores.select("id", "katz"), steps
 
 
 def salsa(
@@ -163,33 +126,14 @@ def salsa(
     # loop-scoped conf BEFORE setup, so the cached static tables land on
     # hash(key, p) partitioning directly
     with loop_scope(spark, p) as scope:
-        e = edges.select("src_id", "dst_id", "weight")
-        # static normalized transition fractions via a window over the
-        # exchange each cache needs anyway (one exchange per side; the
-        # former groupBy+join+repartition chains paid two more each) —
-        # cached partitioned by the join key of their half-step
-        e_fwd = scope.cache(
-            e.repartition(p, "src_id")
-            .select(
-                "src_id", "dst_id",
-                (F.col("weight") / F.sum("weight").over(
-                    Window.partitionBy("src_id")
-                )).alias("fo"),
-            )
-        )
-        e_bwd = scope.cache(
-            e.repartition(p, "dst_id")
-            .select(
-                "src_id", "dst_id",
-                (F.col("weight") / F.sum("weight").over(
-                    Window.partitionBy("dst_id")
-                )).alias("fi"),
-            )
-        )
+        # static normalized transition fractions, each cached partitioned
+        # by the join key of its half-step
+        e_fwd = edge_side(scope, edges, p, "src_id", normalize=True)
+        e_bwd = edge_side(scope, edges, p, "dst_id", normalize=True)
         e_fwd.count()
         e_bwd.count()
 
-        srcs = e.select("src_id").distinct()
+        srcs = edges.select("src_id").distinct()
         n_src = srcs.count()
         if n_src == 0:
             return spark.createDataFrame([], "id long, hub double, auth double"), 0
@@ -197,73 +141,28 @@ def salsa(
             F.col("src_id").alias("id"), F.lit(1.0 / n_src).alias("hub")
         )
 
-        def step_fn(state: DataFrame, step: int):
-            h = state.select("id", "hub").hint("shuffle_hash")
-            a_tbl = (
-                h.join(e_fwd, h.id == e_fwd.src_id)
-                .select("dst_id", (F.col("hub") * F.col("fo")).alias("c"))
-                .groupBy("dst_id")
-                .agg(F.sum("c").alias("auth"))
-                .select(F.col("dst_id").alias("id"), "auth")
-                .localCheckpoint(eager=True)  # job 1: auth feeds the hub pass
-            )
-            a = a_tbl.hint("shuffle_hash")
-            h_tbl = (
-                a.join(e_bwd, a.id == e_bwd.dst_id)
-                .select("src_id", (F.col("auth") * F.col("fi")).alias("c"))
-                .groupBy("src_id")
-                .agg(F.sum("c").alias("hub"))
-                .select(F.col("src_id").alias("id"), "hub")
-            )
+        def update(state: DataFrame, cut) -> DataFrame:
+            auth = cut(half_step(state, "hub", e_fwd))  # feeds the hub pass
             prev = state.select("id", F.col("hub").alias("prev_hub"))
-            # job 2: checkpoint with the delta riding as an observed
-            # metric — the former third job (delta agg) is gone
-            obs = Observation()
-            new = (
-                h_tbl.join(prev, "id", "left")
-                .observe(
-                    obs,
-                    F.max(
-                        F.abs(
-                            F.col("hub")
-                            - F.coalesce(F.col("prev_hub"), F.lit(0.0))
-                        )
-                    ).alias("d"),
-                )
-                .select("id", "hub")
-                .localCheckpoint(eager=True)
+            return (
+                half_step(auth, "s", e_bwd, frm="dst_id", to="src_id")
+                .select("id", F.col("s").alias("hub"))
+                .join(prev, "id", "left")
             )
-            return new, {"max_delta": float(obs.get["d"] or 0.0)}
 
         # State is the hub distribution only (auth lives on the OTHER
         # bipartite side — a per-step full-outer merge would add a barrier
         # for nothing). The returned auth is the forward half-step induced
         # by the FINAL hubs — one extra constant-cost pass after the loop;
         # the SQL oracle replays this exact contract.
-        runner = SuperstepRunner(
-            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+        hubs, steps = fixpoint(
+            spark, init, update, tol=tol, max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+            resume=resume, run_id=run_id, metrics_sink=metrics_sink,
         )
-        hubs, steps = runner.run(
-            init,
-            step_fn,
-            converged=lambda m: m["max_delta"] < tol,
-            max_iter=max_iter,
-            resume=resume,
-            pre_truncated=True,
-        )
-        # final auth = one forward half-step over the converged hubs
-        hh = hubs.select("id", "hub").hint("shuffle_hash")
-        auth = (
-            hh.join(e_fwd, hh.id == e_fwd.src_id)
-            .select("dst_id", (F.col("hub") * F.col("fo")).alias("c"))
-            .groupBy("dst_id")
-            .agg(F.sum("c").alias("auth"))
-            .select(F.col("dst_id").alias("id"), "auth")
-        )
+        auth = half_step(hubs, "hub", e_fwd).select("id", F.col("s").alias("auth"))
         out = (
-            hubs.select("id", "hub")
-            .join(auth, "id", "full_outer")
+            hubs.join(auth, "id", "full_outer")
             .select(
                 "id",
                 F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
@@ -271,6 +170,7 @@ def salsa(
             )
             .localCheckpoint(eager=True)
         )
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
+        # out no longer reads the final hubs; with max_iter=0 they are
+        # still a plan over the caller's edges, whose checkpoints stay
+        release_checkpoint(hubs, protect=checkpoint_leaf_ids(edges))
     return out, steps

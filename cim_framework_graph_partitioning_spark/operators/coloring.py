@@ -166,6 +166,5 @@ def greedy_coloring(
         state, steps = runner.run(
             init, step_fn, converged=lambda m: m["uncolored"] == 0,
             max_iter=max_iter, resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
         )
         return state.select("id", "color"), steps

@@ -96,7 +96,6 @@ def connected_components(
         labels, steps = runner.run(
             init, step_fn, converged=lambda m: m["changed"] == 0,
             max_iter=max_iter, resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
         )
     return labels, steps
 
@@ -201,7 +200,6 @@ def _cc_two_phase(
         stars, steps = runner.run(
             init, step_fn, converged=lambda m: m["changed"] == 0,
             max_iter=max_iter, resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
         )
         # the post-loop label join is a one-shot plan: it runs under the
         # caller's conf (AQE coalescing, plans/scale.py) while verts

@@ -21,36 +21,24 @@ t_raw / ||t_raw|| — one fewer normalization barrier per superstep,
 bit-identical result (both the SQL oracle and the numpy test oracle
 mirror this exact dataflow).
 
-Scale shape (same discipline as pagerank.py):
-
-* TWO cached copies of the edge table, hash-partitioned by src_id and
-  by dst_id respectively — each half-step joins the (small) score
-  table against a pre-exchanged static side, so only scores shuffle
-  per superstep. The 2x static cache is the price of never
-  re-exchanging the 100-TB edge table; columnar caching makes it
-  cheap relative to a per-step exchange.
-* shuffle_hash hints keep the cached edge partitions from being
-  re-sorted under sort-merge-join every superstep.
-* The L2 norms are driver scalars; they re-enter the plan via a 1-row
-  broadcast table (NOT literals — per-step literals defeat the
-  whole-stage-codegen cache, a measured serial recompile per step).
-* Per superstep: two localCheckpoint materializations (a_raw, then the
-  joined state) + one norm agg + one delta agg — all bounded
-  full-vertex scans; no driver-side collect grows with the graph.
-* SuperstepRunner provides durable checkpoints + per-partition lineage
-  + metrics, so a run is resumable mid-convergence (north rule).
+Each half-step is plans/matvec.py's shared matvec over its own cached
+edge side (by src_id for auth, by dst_id for hub). The two raw tables
+feed more than one consumer each, so each is materialized once per
+superstep; the L2 norms re-enter the plan as a 1-row broadcast
+aggregate (NOT literals — per-step literals defeat the
+whole-stage-codegen cache, a measured serial recompile per step).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.matvec import edge_side, fixpoint, half_step
 from ..plans.scale import auto_blocks
 from ..plans.scope import loop_scope
-from ..plans.superstep import SuperstepRunner
 
 
 def hits(
@@ -85,11 +73,10 @@ def hits(
         if n == 0:
             return spark.createDataFrame([], "id long, hub double, auth double"), 0
 
-        e = edges.select("src_id", "dst_id", "weight")
         # lazy caches: step 1's two matvec jobs materialize each inside the
         # job that first scans it (two eager setup counts were two extra jobs)
-        e_by_src = scope.cache(e.repartition(p, "src_id"))
-        e_by_dst = scope.cache(e.repartition(p, "dst_id"))
+        e_by_src = edge_side(scope, edges, p, "src_id")
+        e_by_dst = edge_side(scope, edges, p, "dst_id")
 
         init = verts.select(
             "id",
@@ -97,46 +84,28 @@ def hits(
             F.lit(0.0).alias("auth"),
         )
 
-        def step_fn(state: DataFrame, step: int):
-            # -- auth half-step: scores shuffle to the src-partitioned edges
-            h = state.select("id", "hub").hint("shuffle_hash")
-            a_contribs = h.join(e_by_src, h.id == e_by_src.src_id).select(
-                "dst_id", (F.col("hub") * F.col("weight")).alias("c")
-            )
-            a_sums = a_contribs.groupBy("dst_id").agg(F.sum("c").alias("a_raw"))
-            # the state IS the vertex table: joining it (instead of a
-            # separate verts cache) carries prev_hub/prev_auth along for
-            # free, so the former third join against prev is gone.
-            a_tbl = (
-                state.join(
-                    a_sums.hint("shuffle_hash"), state.id == a_sums.dst_id, "left"
-                )
-                .select(
+        def update(state: DataFrame, cut) -> DataFrame:
+            # -- auth half-step. The state IS the vertex table: joining it
+            # carries prev_hub/prev_auth along for free.
+            a_sums = half_step(state, "hub", e_by_src)
+            a_tbl = cut(  # a_raw feeds two consumers
+                state.join(a_sums.hint("shuffle_hash"), "id", "left").select(
                     "id",
-                    F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a_raw"),
+                    F.coalesce(F.col("s"), F.lit(0.0)).alias("a_raw"),
                     F.col("hub").alias("prev_hub"),
                     F.col("auth").alias("prev_auth"),
                 )
-                .localCheckpoint(eager=True)  # job 1: a_raw feeds two consumers
             )
-
             # -- hub half-step over the UN-normalized a_raw
-            a = a_tbl.select("id", "a_raw").hint("shuffle_hash")
-            t_contribs = a.join(e_by_dst, a.id == e_by_dst.dst_id).select(
-                "src_id", (F.col("a_raw") * F.col("weight")).alias("c")
-            )
-            t_sums = t_contribs.groupBy("src_id").agg(F.sum("c").alias("t_raw"))
-            raw = (
-                a_tbl.join(t_sums.hint("shuffle_hash"),
-                           a_tbl.id == t_sums.src_id, "left")
-                .select(
-                    a_tbl.id,
+            t_sums = half_step(a_tbl, "a_raw", e_by_dst, frm="dst_id", to="src_id")
+            raw = cut(  # the raw state feeds the norms and the scores
+                a_tbl.join(t_sums.hint("shuffle_hash"), "id", "left").select(
+                    "id",
                     "a_raw",
-                    F.coalesce(F.col("t_raw"), F.lit(0.0)).alias("t_raw"),
+                    F.coalesce(F.col("s"), F.lit(0.0)).alias("t_raw"),
                     "prev_hub",
                     "prev_auth",
                 )
-                .localCheckpoint(eager=True)  # job 2: raw state for 2 consumers
             )
 
             # both L2 norms ride a 1-row BROADCAST AGG over the checkpointed
@@ -155,59 +124,26 @@ def hits(
                     ).alias("nt"),
                 )
             )
-            scored = raw.crossJoin(norm_df).select(
+            hub = (F.when(F.col("nt") != 0.0, F.col("t_raw") / F.col("nt"))
+                   .otherwise(F.lit(0.0)))
+            auth = (F.when(F.col("na") != 0.0, F.col("a_raw") / F.col("na"))
+                    .otherwise(F.lit(0.0)))
+            # a zero norm makes the zero scores the fixpoint: compare the
+            # degenerate state with itself so the loop stops now
+            degenerate = (F.col("na") == 0.0) | (F.col("nt") == 0.0)
+            return raw.crossJoin(norm_df).select(
                 "id",
-                F.when(F.col("nt") != 0.0, F.col("t_raw") / F.col("nt"))
-                .otherwise(F.lit(0.0)).alias("hub"),
-                F.when(F.col("na") != 0.0, F.col("a_raw") / F.col("na"))
-                .otherwise(F.lit(0.0)).alias("auth"),
-                "prev_hub",
-                "prev_auth",
+                hub.alias("hub"),
+                auth.alias("auth"),
+                F.when(degenerate, hub).otherwise(F.col("prev_hub")).alias("prev_hub"),
+                F.when(degenerate, auth).otherwise(F.col("prev_auth")).alias("prev_auth"),
                 "na",
                 "nt",
             )
-            # job 3: MATERIALIZE the scored state, with the L-inf deltas and
-            # norms riding along as observed metrics — the former separate
-            # stats agg re-executed the norm broadcast, and every later
-            # consumer of the lazy scored projection re-executed it again;
-            # the checkpoint pays the norm sub-job exactly once per step.
-            obs = Observation()
-            newc = (
-                scored.observe(
-                    obs,
-                    F.max(F.abs(F.col("hub") - F.col("prev_hub"))).alias("dh"),
-                    F.max(F.abs(F.col("auth") - F.col("prev_auth"))).alias("da"),
-                    F.min("na").alias("na"),
-                    F.min("nt").alias("nt"),
-                )
-                .select("id", "hub", "auth")
-                .localCheckpoint(eager=True)
-            )
-            m = obs.get
-            na, nt = float(m["na"] or 0.0), float(m["nt"] or 0.0)
-            if na == 0.0 or nt == 0.0:
-                # degenerate: zero scores ARE the fixpoint — converge now
-                # (newc is exactly the all-zero score table: both norm
-                # when-guards fell through to 0.0 for every row)
-                return newc, {"max_delta": 0.0, "na": na, "nt": nt}
-            return newc, {
-                "max_delta": max(float(m["dh"]), float(m["da"])),
-                "na": na,
-                "nt": nt,
-            }
 
-        runner = SuperstepRunner(
-            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+        return fixpoint(
+            spark, init, update, tol=tol, max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+            resume=resume, run_id=run_id, metrics_sink=metrics_sink,
+            metrics={"na": F.min("na"), "nt": F.min("nt")},
         )
-        scores, steps = runner.run(
-            init,
-            step_fn,
-            converged=lambda m: m["max_delta"] < tol,
-            max_iter=max_iter,
-            resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
-        )
-        if metrics_sink is not None:
-            metrics_sink.extend(runner.history)
-        return scores.select("id", "hub", "auth"), steps

@@ -90,7 +90,6 @@ def label_propagation(
         labels, steps = runner.run(
             init, step_fn, converged=lambda m: m["changed"] == 0,
             max_iter=max_iter, resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
         )
     return labels, steps
 

@@ -173,7 +173,6 @@ def maximal_independent_set(
         state, steps = runner.run(
             init, step_fn, converged=lambda m: m["undecided"] == 0,
             max_iter=max_iter, resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
         )
     return (
         state.select("id", (F.col("status") == IN_MIS).alias("in_mis")),

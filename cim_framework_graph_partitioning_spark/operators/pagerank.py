@@ -12,20 +12,18 @@ Semantics (standard): damping d, N vertices, out-weight W_i = Σ_j w_ij.
 converged when max_j |r'_j − r_j| < tol. float64 throughout; tolerance
 absorbs re-association across partitions (SURVEY §4.3).
 
-Superstep cost discipline: exactly ONE Spark job per superstep — the
-state checkpoint materialization, with (max|Δ|, next dangling mass)
-collected as observed metrics of that same job (Dataset.observe), so
-there is no separate stats scan. The dangling flag rides in the state
-DataFrame so no separate dangling scan is needed either.
+The dataframe path is plans/matvec.py's weighted-matvec superstep (one
+job per superstep, max|Δ| and the next dangling mass riding it as
+observed metrics). The dangling flag and the teleport-set flag ride in
+the state, so no per-superstep scan of a separate vertex table is
+needed.
 
 Two execution paths, identical semantics:
 
-* ``mode="dataframe"`` — pure join+groupBy. Edges are normalized ONCE,
-  hash-repartitioned on src_id and cached, so every superstep's join
-  reuses that exchange and only the (small) rank table shuffles. The
-  dst-side aggregation gets Spark's map-side partial combine; with
-  ``salted=True`` an explicit two-phase (dst,salt)→dst aggregation
-  bounds any single reducer's hub load (power-law skew handling).
+* ``mode="dataframe"`` — the shared half-step over edges normalized
+  once by source. With ``salted=True`` the dst-side sum is an explicit
+  two-phase (dst,salt)→dst aggregation that bounds any single reducer's
+  hub load (power-law skew handling).
 
 * ``mode="csr"`` — per-partition gather-scatter over locally CSR-packed
   adjacency blocks: edges are packed once into numpy (indptr, dst,
@@ -40,23 +38,18 @@ graphs); dataframe wins ~1.5x in the DRAM-bound regime (32M edges on
 one box) because csr pays an Arrow hop into Python workers per
 superstep. dataframe is the default; csr is the documented mid-regime
 option.
-
-At 100 TB the static normalized-edge table dominates; both paths scan it
-once per superstep with only rank-sized shuffles on top, and
-checkpointing bounds lineage (plans/superstep.py) while providing
-mid-convergence resume.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.matvec import edge_side, fixpoint, half_step
 from ..plans.scale import auto_blocks
 from ..plans.scope import loop_scope
-from ..plans.superstep import SuperstepRunner
 
 
 def pagerank_salt_col(salt_buckets: int) -> F.Column:
@@ -153,26 +146,21 @@ def pagerank(
         if ns == 0:
             raise ValueError("personalized pagerank: no source id is in the graph")
 
-        # norm via a window over the src_id exchange the cache needs anyway:
-        # one exchange total (the former groupBy+join+repartition chain paid
-        # two more for the identical frac values).
-        norm = edges.repartition(p, "src_id").select(
-            "src_id",
-            "dst_id",
-            (F.col("weight") / F.sum("weight").over(Window.partitionBy("src_id"))).alias("frac"),
-        )
+        # the static side: weights normalized by source over the src_id
+        # exchange the cache needs anyway
+        norm = edge_side(scope, edges, p, "src_id", normalize=True)
         if mode == "csr":
             # hash-partition the (static, large) block table by its cogroup
             # key ONCE: the per-superstep cogroup then reuses this exchange
             # and only the rank side shuffles — the same static-side rule
-            # the dataframe path follows.
+            # the dataframe path follows. The blocks replace the edge cache.
             blocks = scope.cache(
                 _pack_csr_blocks(norm, p, max_edges_per_slice=csr_slice_edges)
                 .repartition(p, "block")
             )
             blocks.count()
+            norm.unpersist()
         else:
-            norm = scope.cache(norm)
             norm.count()
 
         # state schema: (id, rank, has_out, in_s) — has_out/in_s ride IN the
@@ -209,32 +197,27 @@ def pagerank(
                 "in_s",
             )
 
-        def step_fn(ranks: DataFrame, step: int):
+        def update(ranks: DataFrame, _cut) -> DataFrame:
             if mode == "csr":
                 sums = _csr_contributions(ranks.select("id", "rank"), blocks, p)
-            else:
-                # shuffle-hash, not sort-merge: the cached edge table must
-                # not be re-sorted every superstep (measured 1.8x/step), and
-                # the rank table is never broadcastable at the target scale.
+            elif salted:
+                # explicit two-phase aggregation: partial per (dst, salt)
+                # bounds a hub reducer to 1/salt_buckets of its inflow.
+                # The salt MUST key on the edge (src_id, dst_id), never on
+                # the value being summed: identical contributions into a
+                # hub (uniform early ranks x equal weight) would otherwise
+                # all hash to ONE bucket and the skew protection would
+                # evaporate exactly when needed.
                 r = ranks.select("id", "rank").hint("shuffle_hash")
-                contribs = r.join(norm, r.id == norm.src_id).select(
-                    "src_id", "dst_id", (F.col("rank") * F.col("frac")).alias("contrib")
+                sums = (
+                    r.join(norm, r.id == norm.src_id)
+                    .groupBy("dst_id", pagerank_salt_col(salt_buckets))
+                    .agg(F.sum(F.col("rank") * F.col("weight")).alias("partial"))
+                    .groupBy(F.col("dst_id").alias("id"))
+                    .agg(F.sum("partial").alias("s"))
                 )
-                if salted:
-                    # explicit two-phase aggregation: partial per (dst, salt)
-                    # bounds a hub reducer to 1/salt_buckets of its inflow.
-                    # The salt MUST key on the edge (src_id, dst_id), never on
-                    # the value being summed: identical contributions into a
-                    # hub (uniform early ranks x equal frac) would otherwise
-                    # all hash to ONE bucket and the skew protection would
-                    # evaporate exactly when needed.
-                    partial = contribs.groupBy(
-                        "dst_id",
-                        pagerank_salt_col(salt_buckets),
-                    ).agg(F.sum("contrib").alias("partial"))
-                    sums = partial.groupBy("dst_id").agg(F.sum("partial").alias("s"))
-                else:
-                    sums = contribs.groupBy("dst_id").agg(F.sum("contrib").alias("s"))
+            else:
+                sums = half_step(ranks, "rank", norm)
 
             # base rides in a 1-row BROADCAST AGG of the current state, NOT
             # a literal (per-step literals defeat the whole-stage-codegen
@@ -268,53 +251,26 @@ def pagerank(
             # the state itself is the vertex table (it carries every vertex
             # plus has_out/in_s), so the new rank is one left join of state
             # with sums — no separate verts join, no separate prev join.
-            new_ranks = (
-                ranks.join(sums.hint("shuffle_hash"), ranks.id == sums.dst_id, "left")
+            return (
+                ranks.join(sums.hint("shuffle_hash"), "id", "left")
                 .crossJoin(base_df)
                 .select(
                     "id",
                     (tele + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
                     "has_out",
                     "in_s",
-                    F.col("rank").alias("prev"),
+                    F.col("rank").alias("prev_rank"),
                 )
-            )
-            # ONE job per superstep: the convergence stats ride the
-            # checkpoint materialization as observed metrics (max/sum are
-            # the same aggregates the former second job computed), and the
-            # checkpointed state drops the prev column.
-            obs = Observation()
-            newc = (
-                new_ranks.observe(
-                    obs,
-                    F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"),
-                    F.sum(
-                        F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
-                    ).alias("dm"),
-                )
-                .select("id", "rank", "has_out", "in_s")
-                .localCheckpoint(eager=True)
-            )
-            m = obs.get
-            return (
-                newc,
-                {"max_delta": float(m["d"]), "dangling_mass": float(m["dm"] or 0.0)},
             )
 
-        runner = SuperstepRunner(
-            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+        ranks, steps = fixpoint(
+            spark, init, update, tol=tol, max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+            resume=resume, run_id=run_id, metrics_sink=metrics_sink,
+            metrics={"dangling_mass": F.sum(
+                F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
+            )},
         )
-        ranks, steps = runner.run(
-            init,
-            step_fn,
-            converged=lambda m: m["max_delta"] < tol,
-            max_iter=max_iter,
-            resume=resume,
-            pre_truncated=True,
-        )
-        if metrics_sink is not None:
-            metrics_sink.extend(runner.history)
         return ranks.select("id", "rank"), steps
 
 
@@ -355,7 +311,7 @@ def _pack_csr_blocks(
                     "src_ids": uniq,
                     "indptr": indptr,
                     "dst_ids": chunk["dst_id"].to_numpy(),
-                    "frac": chunk["frac"].to_numpy(),
+                    "frac": chunk["weight"].to_numpy(),
                 }
             )
         return pd.DataFrame(out)
@@ -405,4 +361,4 @@ def _csr_contributions(ranks: DataFrame, blocks: DataFrame, p: int) -> DataFrame
         .cogroup(blocks.groupBy("block"))
         .applyInPandas(kernel, "dst_id long, s double")
     )
-    return partial.groupBy("dst_id").agg(F.sum("s").alias("s"))
+    return partial.groupBy(F.col("dst_id").alias("id")).agg(F.sum("s").alias("s"))

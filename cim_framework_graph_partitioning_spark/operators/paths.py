@@ -138,7 +138,6 @@ def shortest_paths(
             converged=lambda m: m["changed"] == 0.0,
             max_iter=max_iter,
             resume=resume,
-            pre_truncated=True,
         )
     if metrics_sink is not None:
         metrics_sink.extend(runner.history)

@@ -17,18 +17,17 @@ class's mass reaches a vertex, so the per-superstep width is
 (reachable vertex, class) pairs, not |V| x |classes| dense columns.
 Multi-class propagation is therefore ONE joined pass per superstep
 regardless of how many classes exist (class id is just another group
-key), and the plan is PageRank's §B shape: the normalized edge cache
-is exchanged once; only the state shuffles.
+key): plans/matvec.py's half-step with the label as an extra group key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.matvec import edge_side, fixpoint, half_step
 from ..plans.scale import auto_blocks
 from ..plans.scope import loop_scope
-from ..plans.superstep import SuperstepRunner
 
 
 def label_spreading(
@@ -76,16 +75,17 @@ def label_spreading(
         )
         # S = D^-1/2 W D^-1/2, cached partitioned by src (the join key of
         # the propagation half-step) — built once, never re-exchanged
-        norm = scope.cache(
+        norm = edge_side(
+            scope,
             und.join(deg.select(F.col("id").alias("src_id"),
                                 F.col("d").alias("d_src")), "src_id")
             .join(deg.select(F.col("id").alias("dst_id"),
                              F.col("d").alias("d_dst")), "dst_id")
             .select(
                 "src_id", "dst_id",
-                (F.col("w") / F.sqrt(F.col("d_src") * F.col("d_dst"))).alias("s"),
-            )
-            .repartition(p, "src_id")
+                (F.col("w") / F.sqrt(F.col("d_src") * F.col("d_dst"))).alias("weight"),
+            ),
+            p, "src_id",
         )
         norm.count()
 
@@ -111,57 +111,27 @@ def label_spreading(
             )
         init = y.select("id", "label", F.col("y").alias("score"))
 
-        def step_fn(state: DataFrame, step: int):
-            st = state.select("id", "label", "score").hint("shuffle_hash")
-            prop = (
-                st.join(norm, st.id == norm.src_id)
-                .select(
-                    F.col("dst_id").alias("id"), "label",
-                    (F.col("score") * F.col("s")).alias("c"),
-                )
-                .groupBy("id", "label")
-                .agg(F.sum("c").alias("prop"))
-            )
-            new = (
+        def update(state: DataFrame, _cut) -> DataFrame:
+            prop = half_step(state, "score", norm, keys=("label",))
+            return (
                 prop.join(y.hint("shuffle_hash"), ["id", "label"], "full_outer")
                 .select(
                     "id", "label",
                     (
-                        F.lit(alpha) * F.coalesce(F.col("prop"), F.lit(0.0))
+                        F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))
                         + F.lit(1.0 - alpha) * F.coalesce(F.col("y"), F.lit(0.0))
                     ).alias("score"),
                 )
                 .join(
                     state.select(
-                        "id", "label", F.col("score").alias("prev")
+                        "id", "label", F.col("score").alias("prev_score")
                     ).hint("shuffle_hash"),
                     ["id", "label"], "left",
                 )
-                .observe(
-                    obs := Observation(),
-                    F.max(
-                        F.abs(F.col("score") - F.coalesce(F.col("prev"), F.lit(0.0)))
-                    ).alias("d"),
-                )
-                .select("id", "label", "score")
-                .localCheckpoint(eager=True)
             )
-            # delta rides the checkpoint as an observed metric — the former
-            # separate stats job per superstep is gone (pagerank pattern)
-            return new, {"max_delta": float(obs.get["d"] or 0.0)}
 
-        runner = SuperstepRunner(
-            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+        return fixpoint(
+            spark, init, update, tol=tol, max_iter=max_iter,
+            checkpoint_dir=checkpoint_dir, checkpoint_every=checkpoint_every,
+            resume=resume, run_id=run_id, metrics_sink=metrics_sink,
         )
-        scores, steps = runner.run(
-            init,
-            step_fn,
-            converged=lambda m: m["max_delta"] < tol,
-            max_iter=max_iter,
-            resume=resume,
-            pre_truncated=True,
-        )
-        if metrics_sink is not None:
-            metrics_sink.extend(runner.history)
-        return scores.select("id", "label", "score"), steps

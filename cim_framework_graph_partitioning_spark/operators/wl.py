@@ -156,6 +156,5 @@ def wl_refinement(
 
         state, steps = runner.run(
             init, step_fn, converged=stable, max_iter=bound, resume=resume,
-            pre_truncated=True,  # step_fn checkpoints its own state
         )
     return state.select("id", "color"), steps

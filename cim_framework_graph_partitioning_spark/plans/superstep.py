@@ -159,19 +159,21 @@ class SuperstepRunner:
         converged: Callable[[dict[str, float]], bool],
         max_iter: int,
         resume: bool = False,
-        pre_truncated: bool = False,
     ) -> tuple[DataFrame, int]:
         """Iterate ``state, metrics = step_fn(state, step)`` until
         ``converged(metrics)`` or max_iter. Returns (final_state, steps_run).
 
-        ``step_fn`` performs the distributed pass (it should ``persist()``
-        the new state before running its own convergence action, so the
-        action doubles as materialization); ``converged`` is the
-        driver-side convergence check evaluated each superstep.
+        ``step_fn`` performs the distributed pass and returns the new
+        state already materialized and plan-truncated (typically a
+        ``localCheckpoint(eager=True)`` whose job also computes the
+        metrics); ``converged`` is the driver-side convergence check
+        evaluated each superstep. The runner owns every state it is
+        handed back: it releases each superseded one.
 
         Durable checkpoints (parquet + lineage + metrics) happen every
-        ``checkpoint_every`` supersteps and at convergence; in between,
-        ``localCheckpoint`` truncates the growing iterative plan.
+        ``checkpoint_every`` supersteps and at convergence; in between, a
+        hard barrier (parquet round-trip) every few supersteps resets the
+        physical RDD ancestry that local checkpoints leave in place.
         """
         barrier = PlanBarrier(
             self.spark,
@@ -202,12 +204,12 @@ class SuperstepRunner:
             metrics["superstep_sec"] = round(_time.monotonic() - _t0, 3)
             self._log_metrics(step, metrics)
             done = converged(metrics) or step == max_iter
-            # ALWAYS truncate lineage each superstep: the logical plan
-            # otherwise nests every prior superstep and Catalyst
-            # planning/cache-lookup cost grows superlinearly (measured
-            # 10s/step at cadence 8 vs 1.5s/step truncating each step).
-            # Additionally, a HARD barrier (parquet round-trip) must run
-            # every few supersteps: localCheckpoint does not truncate
+            # step_fn's checkpoint truncates the logical plan every
+            # superstep: otherwise it nests every prior superstep and
+            # Catalyst planning/cache-lookup cost grows superlinearly
+            # (measured 10s/step at cadence 8 vs 1.5s/step truncating
+            # each step). Additionally, a HARD barrier (parquet
+            # round-trip) must run every few supersteps: localCheckpoint does not truncate
             # the physical RDD ancestry in this Spark build, and past
             # ~20 chained soft checkpoints the per-step cost explodes
             # (see plans/barrier.py). The durable checkpoint IS a hard
@@ -220,20 +222,14 @@ class SuperstepRunner:
                 release_checkpoint(new_state, protect=foreign)
                 new_state = snap
                 barrier.mark_hard()
-            elif pre_truncated:
-                if step % barrier.hard_every == 0:
-                    cut = barrier.cut(new_state, hard=True)
-                    release_checkpoint(new_state, protect=foreign)  # replaced pre-truncated frame
-                    new_state = cut
-            else:
-                trunc = barrier.cut(new_state)
-                if new_state.is_cached:
-                    new_state.unpersist()
-                new_state = trunc
+            elif step % barrier.hard_every == 0:
+                cut = barrier.cut(new_state, hard=True)
+                release_checkpoint(new_state, protect=foreign)  # replaced by the cut
+                new_state = cut
             if state.is_cached:
                 state.unpersist()
             # superseded state: if it was a localCheckpoint (step_fn's
-            # own truncation or a soft barrier cut), release its pinned
+            # own truncation), release its pinned
             # RDD — otherwise every superstep leaks one checkpointed RDD
             # plus its whole (untruncated) ancestry into the driver heap.
             if state is not new_state:

@@ -15,6 +15,8 @@ from cim_framework_graph_partitioning_spark.operators.centrality import (
     salsa,
 )
 
+from .test_superstep_checkpoint import MATVEC
+
 
 def _edges_df(spark, triples):
     return spark.createDataFrame(
@@ -121,9 +123,14 @@ def test_salsa_bipartite_degree_proportional(spark):
     assert rows[11] == pytest.approx(2 / 5, abs=1e-9)
 
 
-def test_katz_empty_graph(spark):
+@pytest.mark.parametrize("name", list(MATVEC))
+def test_katz_empty_graph(spark, name):
+    """Katz and the other matvec operators on an edgeless graph: no
+    superstep runs and the result is empty, with the usual columns."""
+    call, columns = MATVEC[name]
     empty = spark.createDataFrame(
         [], "src_id long, dst_id long, weight double"
     )
-    got, steps = katz_centrality(spark, empty, max_iter=3)
+    got, steps = call(spark, empty, max_iter=3)
     assert steps == 0 and got.count() == 0
+    assert got.columns == columns

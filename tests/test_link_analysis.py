@@ -74,10 +74,15 @@ def test_hits_bipartite_hub_authority_split(spark):
     assert got[1][0] > got[2][0] and got[1][0] > got[3][0]
 
 
-def test_hits_empty_graph(spark):
-    empty = spark.createDataFrame([], "src_id long, dst_id long, weight double")
-    scores, steps = hits(spark, empty)
-    assert scores.count() == 0 and steps == 0
+def test_hits_zero_norm_converges_at_once(spark):
+    # all-zero weights: both norms are 0, so the all-zero scores are the
+    # fixpoint and the first superstep already reports no change
+    triples = [(1, 2, 0.0), (2, 3, 0.0), (3, 1, 0.0)]
+    sink: list = []
+    scores, steps = hits(spark, _edges_df(spark, triples), metrics_sink=sink)
+    assert steps == 1
+    assert {(r.hub, r.auth) for r in scores.collect()} == {(0.0, 0.0)}
+    assert [(m["max_delta"], m["na"], m["nt"]) for m in sink] == [(0.0, 0.0, 0.0)]
 
 
 # --- coreness ------------------------------------------------------------

@@ -2,7 +2,9 @@
 is the only code that sets or reads the superstep-loop session conf
 (AQE on/off, shuffle partitions). An operator that needs it opens a
 ``loop_scope`` instead of saving, setting and restoring the conf itself
-— the hand-rolled copies drifted apart and leaked on exceptions."""
+— the hand-rolled copies drifted apart and leaked on exceptions.
+
+Likewise the weighted-matvec loop shape lives in plans/matvec.py."""
 
 from __future__ import annotations
 
@@ -30,3 +32,20 @@ def test_operators_leave_loop_conf_to_loop_scope():
                 for m in rx.finditer(text):
                     offenders.append(f"{path.name}:{i}:{m.group(0)}")
     assert not offenders, f"loop conf handled outside plans/scope.py: {offenders}"
+
+
+MATVEC_OPERATORS = ("pagerank.py", "hits.py", "centrality.py", "spreading.py")
+LOOP_SHAPE = re.compile(r"\b(?:SuperstepRunner|Observation)\(")
+
+
+def test_matvec_operators_leave_the_loop_to_plans_matvec():
+    """The weighted-matvec operators parameterize plans/matvec.py's
+    superstep; none of them builds its own runner loop or observed
+    delta metric."""
+    offenders = [
+        f"{name}:{i}:{m.group(0)}"
+        for name in MATVEC_OPERATORS
+        for i, text in enumerate((OPERATORS / name).read_text().splitlines(), start=1)
+        for m in LOOP_SHAPE.finditer(text)
+    ]
+    assert not offenders, f"matvec loop shape outside plans/matvec.py: {offenders}"
